@@ -13,11 +13,13 @@ deterministic, sub-quadratic pipeline per the north rule:
    candidate pair ⇔ two nodes share ≥1 band bucket. This is a
    self-join on (band, bucket) — shuffle on the bucket key only,
    never O(n²).
-4. **exact Jaccard filter + TF-IDF cosine re-rank** — exact set
-   Jaccard from the token arrays already carried with the pair;
-   TF-IDF cosine computed *relationally* (explode tokens → join IDF
-   weights → sparse dot product via groupBy-sum) — the C5 analog of
-   the reference's `similarity = 1 - distance` (merge.py:102).
+4. **one-pass verify** — ``(type, tokens)`` attach to each side of
+   the deduplicated candidate pairs once; cross-type pairs drop, then
+   exact set Jaccard (sizes only, ``dedup._jaccard``) filters before
+   any TF-IDF work; the survivors' TF-IDF cosine comes from one
+   explode of each pair's token union joined to the IDF table
+   (weight = IDF, so dot = Σ idf² over A∩B) — the C5 analog of the
+   reference's ``similarity = 1 - distance`` (merge.py:102).
 5. threshold → similarity edges for connected components (G5).
 
 Skew/scale notes: bucket hot spots (a band value shared by k nodes)
@@ -34,6 +36,7 @@ from pyspark.sql import functions as F
 from ..functions.caching import track
 from ..functions.hashing import lsh_bands, minhash_signature, stable_node_id
 from ..functions.text import node_text, snake_case, tokenize
+from .dedup import _jaccard
 
 
 def candidate_nodes(nodes_raw: DataFrame) -> DataFrame:
@@ -142,39 +145,74 @@ def verify_pairs(
     cosine_threshold: float = 0.7,
     same_type_only: bool = True,
 ) -> DataFrame:
-    """Exact Jaccard + relational TF-IDF cosine verification of
-    candidate (a_id, b_id) pairs → (a_id, b_id, similarity) merge
-    edges. Token arrays attach AFTER candidate dedup (narrow-join
-    pattern); IDF weights come from the supplied candidate-node set."""
-    feats = _feature_tokens(nodes).select("node_id", "tokens")
-    pairs = (
-        cand.join(
-            feats.select(F.col("node_id").alias("a_id"), F.col("tokens").alias("a_tokens")),
-            "a_id",
+    """Exact Jaccard + TF-IDF cosine verification of candidate
+    (a_id, b_id) pairs → (a_id, b_id, similarity) merge edges, in one
+    pass over the pairs:
+
+    1. ``(type, tokens)`` attach to each side ONCE, after candidate
+       dedup (narrow-join pattern);
+    2. cross-type pairs drop first (``same_type_only``);
+    3. exact Jaccard from set sizes (``dedup._jaccard``) filters BEFORE
+       any TF-IDF work — the merge criterion is an AND, so the result
+       is the same and cosine runs only on the survivors;
+    4. a token's TF-IDF weight is its IDF (token sets are distinct), so
+       each survivor's dot product and both norms come from ONE
+       explode of its token union joined to the IDF table:
+       dot = Σ idf² over A∩B, |A|² = Σ idf² over A.
+
+    IDF comes from the supplied candidate-node set; its document count
+    is a one-row aggregate joined into the plan, so building the plan
+    runs no Spark job."""
+    feats = _feature_tokens(nodes).select("node_id", "type", "tokens")
+
+    def side(s: str) -> DataFrame:
+        return feats.select(
+            F.col("node_id").alias(f"{s}_id"),
+            F.col("type").alias(f"{s}_type"),
+            F.col("tokens").alias(f"{s}_tokens"),
         )
-        .join(
-            feats.select(F.col("node_id").alias("b_id"), F.col("tokens").alias("b_tokens")),
-            "b_id",
-        )
-        .select("a_id", "b_id", "a_tokens", "b_tokens")
-    )
-    pairs = tfidf_cosine(scored_pairs(pairs), nodes)
+
+    pairs = cand.select("a_id", "b_id").join(side("a"), "a_id").join(side("b"), "b_id")
     if same_type_only:
-        types = nodes.select("node_id", "type")
-        pairs = (
-            pairs.join(types.withColumnRenamed("node_id", "a_id")
-                       .withColumnRenamed("type", "a_type"), "a_id")
-            .join(types.withColumnRenamed("node_id", "b_id")
-                  .withColumnRenamed("type", "b_type"), "b_id")
-            .filter(F.col("a_type") == F.col("b_type"))
-            .drop("a_type", "b_type")
-        )
-    return pairs.filter(
-        (F.col("jaccard") >= jaccard_threshold)
-        & (F.col("cosine") >= cosine_threshold)
-    ).select(
+        pairs = pairs.filter(F.col("a_type") == F.col("b_type"))
+    pairs = pairs.withColumn("jaccard", _jaccard("a_tokens", "b_tokens")).filter(
+        F.col("jaccard") >= jaccard_threshold
+    )
+    terms = pairs.select(
+        "a_id", "b_id", "jaccard", "a_tokens", "b_tokens",
+        F.explode(F.array_union("a_tokens", "b_tokens")).alias("token"),
+    ).join(F.broadcast(_idf(feats, nodes)), "token")
+    sq = F.col("idf") * F.col("idf")
+    in_a = F.array_contains("a_tokens", F.col("token"))
+    in_b = F.array_contains("b_tokens", F.col("token"))
+    zero = F.lit(0.0)
+    scored = terms.groupBy("a_id", "b_id", "jaccard").agg(
+        F.sum(F.when(in_a & in_b, sq).otherwise(zero)).alias("dot"),
+        F.sum(F.when(in_a, sq).otherwise(zero)).alias("a_sq"),
+        F.sum(F.when(in_b, sq).otherwise(zero)).alias("b_sq"),
+    ).withColumn(
+        "cosine", F.col("dot") / (F.sqrt("a_sq") * F.sqrt("b_sq"))
+    )
+    return scored.filter(F.col("cosine") >= cosine_threshold).select(
         "a_id", "b_id",
         F.greatest(F.col("jaccard"), F.col("cosine")).alias("similarity"),
+    )
+
+
+def _idf(feats: DataFrame, nodes: DataFrame) -> DataFrame:
+    """(token, idf) over the candidate-node set: idf = ln((N+1)/(df+1))
+    + 1 with N = |nodes| and df = the number of nodes carrying the
+    token.  N is a one-row aggregate cross-joined in (no driver-side
+    count)."""
+    n_docs = nodes.agg(F.count("*").cast("double").alias("n_docs"))
+    return (
+        feats.select(F.explode("tokens").alias("token"))
+        .groupBy("token").agg(F.count("*").alias("df"))
+        .crossJoin(n_docs)
+        .select(
+            "token",
+            (F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0)) + 1.0).alias("idf"),
+        )
     )
 
 
@@ -205,116 +243,6 @@ def merge_candidate_nodes(old: DataFrame, delta: DataFrame) -> DataFrame:
             F.col("p.intervention_maturity").alias("intervention_maturity"),
             "n_occurrences", "conv_ids",
         )
-    )
-
-
-def lsh_candidate_pairs(
-    nodes: DataFrame,
-    num_hashes: int = 32,
-    bands: int = 16,
-    max_bucket_size: int = 64,
-) -> DataFrame:
-    """Banded-MinHash self-join → candidate (a_id, b_id) pairs with
-    token arrays attached. O(4) canonical pair form via least/greatest
-    (merge.py:88) + per-pair dedup (A4)."""
-    rows = num_hashes // bands
-    # persist the tokenized features: they feed the signature job, the
-    # bucket-size job, and the two token re-attach joins below
-    feats = track(_feature_tokens(nodes).select("node_id", "tokens"))
-    sig = feats.withColumn("sig", minhash_signature(F.col("tokens"), num_hashes))
-    # bucketed rows are NARROW (ids only): the pre-dedup candidate set
-    # can be orders of magnitude larger than the surviving pairs, so
-    # token arrays are attached AFTER dedup, not dragged through the
-    # self-join shuffle (measured 33 s → ~7 s at 120k nodes)
-    bucketed = sig.select(
-        "node_id",
-        F.explode(lsh_bands(F.col("sig"), bands, rows)).alias("bb"),
-    ).select("node_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    bucketed = track(bucketed)
-
-    # drop degenerate hot buckets before the self-join (skew control)
-    bucket_sizes = bucketed.groupBy("band", "bucket").agg(F.count("*").alias("bsz"))
-    bucketed = bucketed.join(
-        F.broadcast(bucket_sizes.filter(F.col("bsz") > max_bucket_size)),
-        ["band", "bucket"],
-        "left_anti",
-    )
-
-    a = bucketed.select("band", "bucket", F.col("node_id").alias("a_id"))
-    b = bucketed.select("band", "bucket", F.col("node_id").alias("b_id"))
-    cand = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("a_id") < F.col("b_id"))  # F7 self-filter + O4 canonical
-        .select("a_id", "b_id")
-        .dropDuplicates(["a_id", "b_id"])       # A4: one row per pair
-    )
-    pairs = (
-        cand.join(
-            feats.select(F.col("node_id").alias("a_id"), F.col("tokens").alias("a_tokens")),
-            "a_id",
-        )
-        .join(
-            feats.select(F.col("node_id").alias("b_id"), F.col("tokens").alias("b_tokens")),
-            "b_id",
-        )
-        .select("a_id", "b_id", "a_tokens", "b_tokens")
-    )
-    return pairs
-
-
-def scored_pairs(pairs: DataFrame) -> DataFrame:
-    """Exact Jaccard on the carried token sets (re-rank of the LSH
-    approximation; C5 similarity)."""
-    inter = F.size(F.array_intersect(F.col("a_tokens"), F.col("b_tokens")))
-    union = F.size(F.array_union(F.col("a_tokens"), F.col("b_tokens")))
-    return pairs.withColumn(
-        "jaccard", (inter / F.greatest(union, F.lit(1))).cast("double")
-    )
-
-
-def tfidf_cosine(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
-    """Relational sparse TF-IDF cosine for candidate pairs.
-
-    IDF from document frequency over candidate nodes; each node is a
-    sparse unit vector over its tokens; pair cosine = Σ w_a·w_b /
-    (|a||b|) computed by exploding pair tokens and joining the
-    (node, token, weight) table — a groupBy-sum, no UDF, no O(n²).
-    """
-    toks = (
-        _feature_tokens(nodes)
-        .select("node_id", F.explode("tokens").alias("token"))
-        .distinct()
-    )
-    n_docs = nodes.count()
-    idf = toks.groupBy("token").agg(F.count("*").alias("df")).withColumn(
-        "idf", F.log((F.lit(float(n_docs)) + 1.0) / (F.col("df") + 1.0)) + 1.0
-    )
-    w = toks.join(F.broadcast(idf), "token").select(
-        "node_id", "token", F.col("idf").alias("w")
-    )
-    norms = w.groupBy("node_id").agg(F.sqrt(F.sum(F.col("w") ** 2)).alias("norm"))
-
-    pair_keys = pairs.select("a_id", "b_id")
-    dots = (
-        pair_keys.join(w.alias("wa"), F.col("a_id") == F.col("wa.node_id"))
-        .join(
-            w.alias("wb"),
-            (F.col("b_id") == F.col("wb.node_id"))
-            & (F.col("wa.token") == F.col("wb.token")),
-        )
-        .groupBy("a_id", "b_id")
-        .agg(F.sum(F.col("wa.w") * F.col("wb.w")).alias("dot"))
-    )
-    return (
-        pairs.join(dots, ["a_id", "b_id"], "left")
-        .join(norms.withColumnRenamed("node_id", "a_id").withColumnRenamed("norm", "a_norm"), "a_id")
-        .join(norms.withColumnRenamed("node_id", "b_id").withColumnRenamed("norm", "b_norm"), "b_id")
-        .withColumn(
-            "cosine",
-            F.coalesce(F.col("dot"), F.lit(0.0))
-            / (F.col("a_norm") * F.col("b_norm")),
-        )
-        .drop("dot", "a_norm", "b_norm")
     )
 
 
@@ -373,10 +301,10 @@ def similarity_edges(
     spurious candidate scores 0.6/0.48 — the AND separates them with
     margin on both axes.
 
-    The candidate-node aggregation is persisted here: five downstream
-    jobs (signatures, bucket sizing, IDF doc-count, norms, type
-    filter) would otherwise each recompute the groupBy over the full
-    nodes_raw table. The caller owns unpersisting (it is also the
+    The candidate-node aggregation is persisted here: its consumers
+    (signatures, the verify's token features and IDF document count,
+    the alias-identity keys) would otherwise each recompute the groupBy
+    over the full nodes_raw table. The caller owns unpersisting (it is also the
     returned DataFrame). Measured at 4.2M turns / 120k distinct
     nodes (16 cores): whole stage ~21 s (narrow-join LSH + TF-IDF
     re-rank + CC) — all node-scale, so stage C stays

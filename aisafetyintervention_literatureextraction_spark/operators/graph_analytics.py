@@ -36,11 +36,21 @@ Scale design notes (shared by every kernel):
   the standard MR-triangle-counting trick: the wedge fan-out per
   vertex is bounded by its *oriented* out-degree, O(sqrt(m)) on any
   graph, so one celebrity vertex cannot blow up the shuffle the way
-  a naive neighbor self-join would.
+  a naive neighbor self-join would.  ``_triangles`` is the one copy
+  of that join: ``triangle_counts`` and ``ktruss`` enumerate through
+  it, and ``link_prediction`` shares its degree relation.
+- **Shared static relations.**  Spark's CacheManager matches cached
+  plans by result, so a caller that pins a relation a kernel derives
+  (``_symmetrize(edges)``, the ``_triangles`` rows of some edges) has
+  the kernel read that cache instead of recomputing it; ``_pin_once``
+  skips the pin job of a relation already cached.  Stage E shares one
+  symmetrized relation between PageRank, LPA and modularity, and one
+  triangle enumeration between node triangles and edge supports.
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -86,7 +96,7 @@ def _adaptive_coalesce(df: DataFrame):
     coalescing on — this aligns the kernels' behavior across
     sessions).  Scoped to kernels whose per-round stages are LINEAR
     joins/aggregations; the wedge-join enumerations (triangle_counts,
-    link_prediction, _edge_support) stay out — their fan-out is
+    link_prediction, ktruss) stay out — their fan-out is
     generated DURING the stage, so byte-based coalescing could starve
     them of cores.  The session conf is restored on exit; the
     caller's returned lazy plan executes under the caller's own
@@ -174,6 +184,92 @@ def _pin(df: DataFrame, prev: DataFrame | None = None,
         prev.unpersist()
     return out, n
 
+
+def _pin_once(df: DataFrame) -> DataFrame:
+    """``_pin`` for static (non-loop) relations that several kernels
+    build from the same input: when an identical plan is already
+    cached (CacheManager matches plans by result, not by object),
+    reuse it without another job; otherwise pin it (one job)."""
+    if df.storageLevel != StorageLevel.NONE:
+        return df
+    return _pin(df)[0]
+
+
+def _canonical_edges(edges: DataFrame) -> DataFrame:
+    """(a, b) pairs → distinct undirected simple edges as long
+    (least, greatest), self-loops dropped."""
+    a, b = F.col("a").cast("long"), F.col("b").cast("long")
+    return (
+        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
+        .filter("a <> b")
+        .distinct()
+    )
+
+
+def _degrees(e: DataFrame) -> DataFrame:
+    """Pinned ``(node, degree)`` of a canonical edge set."""
+    return _pin_once(
+        e.select(F.col("a").alias("node"))
+        .union(e.select(F.col("b").alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").alias("degree"))
+    )
+
+
+def _triangles(e: DataFrame) -> tuple[DataFrame, DataFrame, list]:
+    """The degree-oriented wedge join — the one triangle enumeration
+    behind ``triangle_counts``, ``ktruss`` and stage E's edge supports.
+
+    Over a canonical (a<b, distinct) edge set: orient every edge
+    low→high by (degree, id); wedges (u→v, u→w) close into a triangle
+    iff v and w are adjacent.  Wedge endpoints are ordered by plain id
+    (comparing oriented ids is NOT safe under degree ties) and the
+    closing edge is probed in both directions, so each triangle is
+    found exactly once.
+
+    Returns ``(deg, tri, temps)``: ``deg`` is the pinned
+    ``(node, degree)`` relation, ``tri`` the lazy triangle rows as
+    SORTED vertex triples ``(x, y, z)`` with x < y < z, ``temps`` the
+    pinned intermediates the caller unpersists once nothing derived
+    from ``tri`` is still to be materialized.  Pins go through
+    ``_pin_once``: a second call on the same edges reuses them."""
+    deg = _degrees(e)
+    da = deg.select(F.col("node").alias("a"), F.col("degree").alias("dega"))
+    db = deg.select(F.col("node").alias("b"), F.col("degree").alias("degb"))
+    oriented = _pin_once(
+        e.join(da, "a").join(db, "b")
+        .select(
+            F.when(
+                (F.col("dega") < F.col("degb"))
+                | ((F.col("dega") == F.col("degb")) & (F.col("a") < F.col("b"))),
+                F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
+            )
+            .otherwise(F.struct(F.col("b").alias("src"), F.col("a").alias("dst")))
+            .alias("o")
+        )
+        .select("o.src", "o.dst")
+    )
+    e1 = oriented.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+    e2 = oriented.select(F.col("src").alias("u"), F.col("dst").alias("w"))
+    closer = oriented.select(F.col("src").alias("v"), F.col("dst").alias("w"))
+    tri = (
+        e1.join(e2, "u")
+        .filter(F.col("v") < F.col("w"))
+        .join(
+            closer.union(
+                closer.select(F.col("w").alias("v"), F.col("v").alias("w"))
+            ),
+            ["v", "w"],
+            "leftsemi",
+        )
+        .select(F.array_sort(F.array("u", "v", "w")).alias("t"))
+        .select(
+            F.col("t")[0].alias("x"),
+            F.col("t")[1].alias("y"),
+            F.col("t")[2].alias("z"),
+        )
+    )
+    return deg, tri, [deg, oriented]
 
 
 @_coalesced_kernel
@@ -428,73 +524,17 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-vertex triangle participation + degree + local clustering
     coefficient over an undirected simple graph ``edges(a, b)``.
 
-    Degree-oriented wedge join: orient every edge low→high by
-    (degree, id); wedges (u→v, u→w) with v<w (orientation order) close
-    into a triangle iff oriented edge (v→w) exists.  Each triangle is
-    found exactly once.  Returns
+    Triangles come from the shared degree-oriented wedge join
+    (``_triangles``).  Returns
     ``(node, degree, triangles, clustering)`` — clustering is the
     integer-derived ratio 2·tri / (deg·(deg−1)) rounded to 6 places
     (0.0 when deg < 2), which is a single float division of exact
     ints on any engine.
     """
-    e = (
-        edges.select(
-            F.least(F.col("a").cast("long"), F.col("b").cast("long")).alias("a"),
-            F.greatest(F.col("a").cast("long"), F.col("b").cast("long")).alias("b"),
-        )
-        .filter("a <> b")
-        .distinct()
-    )
-    e, _ = _pin(e)  # r6: persist+count pins stats in ONE job; no loop
-    # here, so lineage never grows and the checkpoint copy was waste
-    deg, _ = _pin(
-        e.select(F.col("a").alias("node"))
-        .union(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("degree"))
-    )
-    # orient low→high by (degree, id): bounded oriented out-degree
-    da = deg.select(F.col("node").alias("a"), F.col("degree").alias("dega"))
-    db = deg.select(F.col("node").alias("b"), F.col("degree").alias("degb"))
-    oriented = (
-        e.join(da, "a").join(db, "b")
-        .select(
-            F.when(
-                (F.col("dega") < F.col("degb"))
-                | ((F.col("dega") == F.col("degb")) & (F.col("a") < F.col("b"))),
-                F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
-            )
-            .otherwise(F.struct(F.col("b").alias("src"), F.col("a").alias("dst")))
-            .alias("o")
-        )
-        .select("o.src", "o.dst")
-    )
-    oriented, _ = _pin(oriented)
-    e1 = oriented.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    e2 = oriented.select(F.col("src").alias("u"), F.col("dst").alias("w"))
-    closer = oriented.select(F.col("src").alias("v"), F.col("dst").alias("w"))
-    triangles = (
-        e1.join(e2, "u")
-        .filter(
-            # order wedge endpoints by the same orientation key so each
-            # wedge appears once; the key is (deg, id) but comparing
-            # oriented ids directly is NOT safe under degree ties, so we
-            # canonicalize by plain id and probe both closing directions
-            F.col("v") < F.col("w")
-        )
-        .join(
-            closer.select("v", "w").union(
-                closer.select(F.col("w").alias("v"), F.col("v").alias("w"))
-            ),
-            ["v", "w"],
-            "leftsemi",
-        )
-        .select("u", "v", "w")
-    )
+    # no loop here, so lineage never grows: one-job stats pins only
+    deg, tri, _ = _triangles(_pin_once(_canonical_edges(edges)))
     per_node = (
-        triangles.select(F.col("u").alias("node"))
-        .union(triangles.select(F.col("v").alias("node")))
-        .union(triangles.select(F.col("w").alias("node")))
+        tri.select(F.explode(F.array("x", "y", "z")).alias("node"))
         .groupBy("node")
         .agg(F.count("*").alias("triangles"))
     )
@@ -912,21 +952,11 @@ def link_prediction(
     |E| · cap.  Degrees for the Jaccard denominator stay UNcapped —
     the cap prunes candidate generation, not the score.
     """
-    e = (
-        edges.select(
-            F.least(F.col("a").cast("long"), F.col("b").cast("long")).alias("a"),
-            F.greatest(F.col("a").cast("long"), F.col("b").cast("long")).alias("b"),
-        )
-        .filter("a <> b")
-        .distinct()
-    )
-    e, _ = _pin(e)  # r6: one-job stats pins (no loop, no lineage growth)
+    e = _pin_once(_canonical_edges(edges))  # one-job stats pins, no loop
     sym = e.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
         e.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-    deg, _ = _pin(
-        sym.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("deg"))
-    )
+    deg = _degrees(e).withColumnRenamed("degree", "deg")
     centers = deg.filter(F.col("deg") <= max_center_degree).select(
         F.col("node").alias("src"), F.col("deg").alias("cdeg")
     )
@@ -962,125 +992,6 @@ def link_prediction(
             F.col("ra_int").cast("long").alias("ra_int"),
         )
     )
-
-
-def _edge_support(e: DataFrame) -> tuple[DataFrame, list]:
-    """Per-edge triangle support over a canonical (a<b, distinct) edge
-    set: ``(a, b, support)`` for EVERY edge, support = number of
-    triangles the edge participates in (= |N(a) ∩ N(b)|).  Triangles
-    are enumerated once via the same degree-oriented wedge join as
-    ``triangle_counts`` (oriented out-degree O(sqrt m), so a celebrity
-    vertex cannot blow up the wedge fan-out), then each triangle
-    credits its three canonical edges.
-
-    Returns ``(supp_df, temps)`` — ``supp_df`` is lazy over two pinned
-    temporaries; the caller must unpersist ``temps`` after
-    materializing ``supp_df``.
-    """
-    deg, _ = _pin(
-        e.select(F.col("a").alias("node"))
-        .union(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("degree"))
-    )
-    da = deg.select(F.col("node").alias("a"), F.col("degree").alias("dega"))
-    db = deg.select(F.col("node").alias("b"), F.col("degree").alias("degb"))
-    oriented, _ = _pin(
-        e.join(da, "a").join(db, "b")
-        .select(
-            F.when(
-                (F.col("dega") < F.col("degb"))
-                | ((F.col("dega") == F.col("degb")) & (F.col("a") < F.col("b"))),
-                F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
-            )
-            .otherwise(F.struct(F.col("b").alias("src"), F.col("a").alias("dst")))
-            .alias("o")
-        )
-        .select("o.src", "o.dst")
-    )
-    e1 = oriented.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    e2 = oriented.select(F.col("src").alias("u"), F.col("dst").alias("w"))
-    closer = oriented.select(F.col("src").alias("v"), F.col("dst").alias("w"))
-    triangles = (
-        e1.join(e2, "u")
-        .filter(F.col("v") < F.col("w"))
-        .join(
-            closer.select("v", "w").union(
-                closer.select(F.col("w").alias("v"), F.col("v").alias("w"))
-            ),
-            ["v", "w"],
-            "leftsemi",
-        )
-        .select("u", "v", "w")
-    )
-    tri_edges = (
-        triangles.select(F.least("u", "v").alias("a"),
-                         F.greatest("u", "v").alias("b"))
-        .union(triangles.select(F.least("u", "w").alias("a"),
-                                F.greatest("u", "w").alias("b")))
-        .union(triangles.select(F.least("v", "w").alias("a"),
-                                F.greatest("v", "w").alias("b")))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("c"))
-    )
-    supp = (
-        e.join(tri_edges, ["a", "b"], "left")
-        .select(
-            "a", "b",
-            F.coalesce(F.col("c"), F.lit(0)).cast("long").alias("support"),
-        )
-    )
-    return supp, [deg, oriented]
-
-
-def _triangle_rows(e: DataFrame) -> tuple[DataFrame, list]:
-    """All triangles of a canonical (a<b, distinct) edge set as SORTED
-    vertex triples ``(x, y, z)`` with x < y < z — enumerated once via
-    the same degree-oriented wedge join as ``triangle_counts``.
-    Returns ``(tri_df, temps)``; the caller must unpersist ``temps``
-    after materializing anything derived from ``tri_df``."""
-    deg, _ = _pin(
-        e.select(F.col("a").alias("node"))
-        .union(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("degree"))
-    )
-    da = deg.select(F.col("node").alias("a"), F.col("degree").alias("dega"))
-    db = deg.select(F.col("node").alias("b"), F.col("degree").alias("degb"))
-    oriented, _ = _pin(
-        e.join(da, "a").join(db, "b")
-        .select(
-            F.when(
-                (F.col("dega") < F.col("degb"))
-                | ((F.col("dega") == F.col("degb")) & (F.col("a") < F.col("b"))),
-                F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
-            )
-            .otherwise(F.struct(F.col("b").alias("src"), F.col("a").alias("dst")))
-            .alias("o")
-        )
-        .select("o.src", "o.dst")
-    )
-    e1 = oriented.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    e2 = oriented.select(F.col("src").alias("u"), F.col("dst").alias("w"))
-    closer = oriented.select(F.col("src").alias("v"), F.col("dst").alias("w"))
-    tri = (
-        e1.join(e2, "u")
-        .filter(F.col("v") < F.col("w"))
-        .join(
-            closer.select("v", "w").union(
-                closer.select(F.col("w").alias("v"), F.col("v").alias("w"))
-            ),
-            ["v", "w"],
-            "leftsemi",
-        )
-        .select(F.array_sort(F.array("u", "v", "w")).alias("t"))
-        .select(
-            F.col("t")[0].alias("x"),
-            F.col("t")[1].alias("y"),
-            F.col("t")[2].alias("z"),
-        )
-    )
-    return tri, [deg, oriented]
 
 
 def _support_from_triangles(live: DataFrame, tri: DataFrame) -> DataFrame:
@@ -1139,16 +1050,8 @@ def ktruss(
     State pinned via ``_pin(truncate=True)`` every round (live is
     referenced by three semi-joins, tri by two consumers).
     """
-    live, n_prev = _pin(
-        edges.select(
-            F.least(F.col("a").cast("long"), F.col("b").cast("long")).alias("a"),
-            F.greatest(F.col("a").cast("long"), F.col("b").cast("long")).alias("b"),
-        )
-        .filter("a <> b")
-        .distinct(),
-        truncate=True,
-    )
-    tri, temps = _triangle_rows(live)
+    live, n_prev = _pin(_canonical_edges(edges), truncate=True)
+    _, tri, temps = _triangles(live)
     tri, _ = _pin(tri, truncate=True)
     for t in temps:
         t.unpersist()

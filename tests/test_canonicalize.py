@@ -1,17 +1,21 @@
 """Stage C tests — node-text serialization parity, LSH blocking,
 alias-cluster merging, threshold separation."""
 
+import itertools
+
 import pyspark.sql.functions as F
 
 from aisafetyintervention_literatureextraction_spark.datagen import GOLDEN_NODES
 from aisafetyintervention_literatureextraction_spark.functions.text import node_text
 from aisafetyintervention_literatureextraction_spark.ontology import CANONICAL_ALIASES
 from aisafetyintervention_literatureextraction_spark.operators.canonicalize import (
+    _feature_tokens,
+    bucket_join_pairs,
     candidate_nodes,
-    lsh_candidate_pairs,
-    scored_pairs,
+    edges_from_candidates,
+    node_bucket_rows,
     similarity_edges,
-    tfidf_cosine,
+    verify_pairs,
     with_node_text,
 )
 from aisafetyintervention_literatureextraction_spark.operators.components import (
@@ -73,24 +77,55 @@ def test_alias_clusters_merge(spark, corpus):
 
 def test_lsh_recall_vs_exact(spark, corpus):
     """Blocking recall: every pair passing the final threshold is found
-    by LSH (compare against exact all-pairs on this small corpus)."""
+    by the production LSH blocking (bucket rows + bucket self-join),
+    compared against exact all-pairs Jaccard on this small corpus."""
     nr = _nodes_raw(spark, corpus)
     nodes = with_node_text(candidate_nodes(nr)).persist()
-    lsh = scored_pairs(lsh_candidate_pairs(nodes))
-    # exact all-pairs via cross join (test-only, small n)
-    from aisafetyintervention_literatureextraction_spark.operators.canonicalize import (
-        _feature_tokens,
-    )
-    f = _feature_tokens(nodes).select("node_id", "tokens")
-    a = f.select(F.col("node_id").alias("a_id"), F.col("tokens").alias("a_tokens"))
-    b = f.select(F.col("node_id").alias("b_id"), F.col("tokens").alias("b_tokens"))
-    exact = scored_pairs(
-        a.crossJoin(b).filter(F.col("a_id") < F.col("b_id"))
-    ).filter(F.col("jaccard") >= 0.6)
-    exact_pairs = set(map(tuple, exact.select("a_id", "b_id").collect()))
-    lsh_pairs = set(map(tuple, lsh.select("a_id", "b_id").collect()))
+    buckets = node_bucket_rows(nodes)
+    lsh_pairs = set(map(tuple, bucket_join_pairs(buckets, buckets).collect()))
+    # exact all-pairs in Python (test-only, small n)
+    toks = {r["node_id"]: set(r["tokens"])
+            for r in _feature_tokens(nodes).select("node_id", "tokens").collect()}
+    nodes.unpersist()
+    exact_pairs = {
+        (a, b) for a, b in itertools.combinations(sorted(toks), 2)
+        if len(toks[a] & toks[b]) / len(toks[a] | toks[b]) >= 0.6
+    }
+    assert exact_pairs, "corpus has no near-duplicate node pairs"
     missed = exact_pairs - lsh_pairs
     assert not missed, f"LSH missed {len(missed)} true pairs"
+
+
+def test_verify_plan_build_runs_no_job(spark, corpus):
+    """Building the stage-C verify and full-pass edge plans submits no
+    Spark job: every count they need (e.g. the IDF document count) is
+    part of the plan, so the job count of a stage is its writes'."""
+    from aisafetyintervention_literatureextraction_spark.functions.caching import (
+        release_caches,
+    )
+
+    nodes = with_node_text(candidate_nodes(_nodes_raw(spark, corpus))).persist()
+    nodes.count()
+    sc = spark.sparkContext
+    group = "canonicalize-plan-build"
+    sc.setJobGroup(group, "stage-C plan build")
+    try:
+        buckets = node_bucket_rows(nodes)
+        pairs = verify_pairs(bucket_join_pairs(buckets, buckets), nodes, 0.5, 0.6)
+        edges = edges_from_candidates(nodes, 0.5, 0.6)
+        built = list(sc.statusTracker().getJobIdsForGroup(group))
+        # the group does capture jobs: the first action shows up in it
+        pairs.count()
+        acted = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+        release_caches()
+        nodes.unpersist()
+    assert built == [], f"plan build ran jobs {built}"
+    assert acted
+    assert edges.columns == ["a_id", "b_id", "similarity"]
 
 
 def test_candidate_nodes_lww(spark):

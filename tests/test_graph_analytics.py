@@ -304,11 +304,29 @@ def test_bfs_min_distance_on_cycle(spark):
     assert got[2] == 2 and got[3] == 2  # 3 is 2 away from 5, not 3 from 0
 
 
+# table_digest of every A→E output table built from the session
+# ``corpus`` fixture (20 datagen conversations + a 300-turn hot one):
+# pins the warehouse content, so a refactor of stages C-E that changes
+# any merge, pair score (beyond 1e-12) or metric value fails here
+GOLDEN_DIGESTS = {
+    "candidate_nodes": "34fdd513c596623bd1be0eb5b709f276bcc92305ef693faaf29e80afc632fd44",
+    "node_pairs": "32f6c8069ca0b2c499a31682d5eb0e16eec5953cb91ad5d275b0699e1ed0f974",
+    "components": "061b91de84355d3fec946f45bfcced6062da80e5800069671e9dcdef22c2c5bf",
+    "kg_nodes": "fc7c766ade1fcf553199b3c059205494c8cbc683bae2be9f782a1f14011e2db4",
+    "kg_edges": "64d3c6daae911147c2c5f5ae14246143b37deef0097fa89a4834d948c74feee6",
+    "kg_node_metrics": "ad04ff435714ae0bdc8329fb3360901f57032d5e36d246be55103459aecad49c",
+    "kg_edge_metrics": "8d3ce2c7c309666180c11ebd17ef354e2bda8185e0611c004fefd83686705e10",
+}
+
+
 def test_stage_e_kg_node_metrics(spark, corpus, warehouse):
     """--analytics lands kg_node_metrics: one row per kg_node, metrics
     equal to running the kernels directly on the undirected kg_edges
     pair set, isolated nodes all-zero, and the table version stable
-    under an idempotent re-run."""
+    under an idempotent re-run.  The whole A→E warehouse matches its
+    golden digest, and the run record's counts match the tables."""
+    from digest import table_digest
+
     from aisafetyintervention_literatureextraction_spark.catalog import Catalog
     from aisafetyintervention_literatureextraction_spark.plans.pipeline import (
         run_pipeline,
@@ -317,6 +335,20 @@ def test_stage_e_kg_node_metrics(spark, corpus, warehouse):
     df, _ = corpus
     run_pipeline(spark, df, warehouse, analytics=True)
     cat = Catalog(spark, warehouse)
+    assert {t: table_digest(cat, t) for t in GOLDEN_DIGESTS} == GOLDEN_DIGESTS
+    recorded = {
+        r["metric"]: int(r["value"])
+        for r in cat.read("_ckpt_metrics").filter(
+            "metric IN ('n_kg_nodes', 'n_kg_edges', 'n_candidate_pairs',"
+            " 'n_nodes_scored', 'n_edges_scored')").collect()
+    }
+    assert recorded == {
+        "n_kg_nodes": cat.read("kg_nodes").count(),
+        "n_kg_edges": cat.read("kg_edges").count(),
+        "n_candidate_pairs": cat.read("node_pairs").count(),
+        "n_nodes_scored": cat.read("kg_node_metrics").count(),
+        "n_edges_scored": cat.read("kg_edge_metrics").count(),
+    }
     nodes = cat.read("kg_nodes")
     metrics = cat.read("kg_node_metrics")
     assert metrics.count() == nodes.count()
