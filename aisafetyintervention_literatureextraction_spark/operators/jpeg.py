@@ -1,24 +1,11 @@
-"""Baseline + progressive JPEG codec, pure numpy + stdlib — no
-PIL/libjpeg.
+"""Baseline JPEG encoder, pure numpy + stdlib — no PIL/libjpeg.
 
-Decoder: baseline sequential DCT (SOF0/SOF1) AND progressive DCT
-(SOF2: spectral-selection bands, successive-approximation DC/AC
-first + refinement scans with EOB runs and correction bits —
-the T.81 Annex G / libjpeg scan semantics), 8-bit samples, grayscale
-or YCbCr with arbitrary 1-2× sampling factors (4:4:4, 4:2:2, 4:2:0),
-interleaved and non-interleaved scans, DRI/RSTn restart markers,
-byte stuffing. Arithmetic coding and hierarchical mode remain out of
-scope and return None (the PIL escape hatch in
-multimodal.decode_image covers them when installed).
-
-Encoder: fixture writer for tests — baseline, Annex K quantization
-(quality-scaled) and Annex K Huffman tables, 4:4:4 or 4:2:0,
-optional restart interval; ``encode_jpeg_progressive`` emits a
-4-scan-kind progressive scan script (DC first Al=1 → DC refine →
-per-component AC first bands Al=1 → AC refine Al=0) so the decoder's
-refinement paths are pinned from both sides. At quality=100 the
-quant tables collapse to 1s, so encode→decode round-trips within ±2
-counts (float DCT + clipping).
+Fixture writer for the PDF test corpus (``pdfgen.doc_image`` embeds its
+output as a /DCTDecode image, which the PDF reader passes through
+byte for byte): baseline sequential DCT, Annex K quantization
+(quality-scaled) and Annex K Huffman tables, 4:4:4 or 4:2:0, optional
+DRI/RSTn restart interval.  The output bytes are pinned by md5 in
+tests/test_pdf_foreign.py.
 
 JPEG spec structures (zigzag order, Annex K tables) are public
 constants from ITU-T T.81.
@@ -115,20 +102,6 @@ _D = np.array([
 ])
 
 
-def _build_huffman(bits, vals):
-    """Canonical Huffman: {(length, code): symbol}."""
-    table = {}
-    code = 0
-    i = 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            table[(length, code)] = vals[i]
-            code += 1
-            i += 1
-        code <<= 1
-    return table
-
-
 def _encode_table(bits, vals):
     """Canonical Huffman: {symbol: (code, length)}."""
     out = {}
@@ -141,442 +114,6 @@ def _encode_table(bits, vals):
             i += 1
         code <<= 1
     return out
-
-
-class _BitReader:
-    """MSB-first reader over entropy segments (stuffing pre-removed);
-    segments are restart-interval spans — next_segment() byte-aligns."""
-
-    def __init__(self, segments: list[bytes]):
-        self.segments = segments
-        self.si = 0
-        self.data = segments[0] if segments else b""
-        self.pos = 0
-        self.bit = 0
-
-    def next_segment(self) -> None:
-        self.si += 1
-        self.data = self.segments[self.si]
-        self.pos = 0
-        self.bit = 0
-
-    def read_bit(self) -> int:
-        b = (self.data[self.pos] >> (7 - self.bit)) & 1
-        self.bit += 1
-        if self.bit == 8:
-            self.bit = 0
-            self.pos += 1
-        return b
-
-    def read_bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
-
-    def huff(self, table) -> int:
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | self.read_bit()
-            sym = table.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("bad huffman code")
-
-
-def _extend(v: int, s: int) -> int:
-    return v - (1 << s) + 1 if v < (1 << (s - 1)) else v
-
-
-def decode_jpeg(payload: bytes):
-    """Baseline or progressive JPEG → uint8 RGB array (h, w, 3), or None."""
-    if not payload or payload[:2] != b"\xff\xd8":
-        return None
-    try:
-        return _decode(payload)
-    except Exception:
-        return None
-
-
-def _split_entropy(p: bytes, i: int):
-    """Entropy-coded data starting at ``i`` → (restart segments with
-    byte stuffing removed, position of the next marker)."""
-    segments: list[bytes] = []
-    cur = bytearray()
-    while i < len(p):
-        b = p[i]
-        if b != 0xFF:
-            cur.append(b)
-            i += 1
-            continue
-        m = p[i + 1]
-        if m == 0x00:
-            cur.append(0xFF)
-            i += 2
-        elif 0xD0 <= m <= 0xD7:  # RSTn
-            segments.append(bytes(cur))
-            cur = bytearray()
-            i += 2
-        else:  # next real marker (EOI, SOS, DHT, ...)
-            break
-    segments.append(bytes(cur))
-    return segments, i
-
-
-def _decode(p: bytes):
-    qt = {}
-    huff_dc = {}
-    huff_ac = {}
-    frame = None
-    coefs = None  # progressive: per-component zigzag coefficient grids
-    restart_interval = 0
-    pos = 2
-    while pos < len(p):
-        if p[pos] != 0xFF:
-            raise ValueError("marker expected")
-        m = p[pos + 1]
-        if m == 0xD9:  # EOI
-            break
-        ln = struct.unpack(">H", p[pos + 2:pos + 4])[0]
-        seg = p[pos + 4:pos + 2 + ln]
-        pos += 2 + ln
-        if m == 0xDB:  # DQT
-            i = 0
-            while i < len(seg):
-                pq, tq = seg[i] >> 4, seg[i] & 15
-                i += 1
-                if pq == 0:
-                    qt[tq] = np.frombuffer(
-                        seg[i:i + 64], dtype=np.uint8
-                    ).astype(np.float64)
-                    i += 64
-                else:
-                    qt[tq] = np.frombuffer(
-                        seg[i:i + 128], dtype=">u2"
-                    ).astype(np.float64)
-                    i += 128
-        elif m in (0xC0, 0xC1, 0xC2):  # SOF0/1 baseline, SOF2 progressive
-            _prec, h, w, nc = seg[0], *struct.unpack(">HH", seg[1:5]), seg[5]
-            comps = []
-            for c in range(nc):
-                cid, hv, tq = seg[6 + 3 * c:9 + 3 * c]
-                comps.append(
-                    {"id": cid, "h": hv >> 4, "v": hv & 15, "tq": tq}
-                )
-            frame = {"h": h, "w": w, "comps": comps,
-                     "progressive": m == 0xC2}
-            if m == 0xC2:
-                coefs = _alloc_coefs(frame)
-        elif m == 0xC4:  # DHT
-            i = 0
-            while i < len(seg):
-                tc, th = seg[i] >> 4, seg[i] & 15
-                bits = list(seg[i + 1:i + 17])
-                n = sum(bits)
-                vals = list(seg[i + 17:i + 17 + n])
-                (huff_ac if tc else huff_dc)[th] = _build_huffman(bits, vals)
-                i += 17 + n
-        elif m == 0xDD:  # DRI
-            restart_interval = struct.unpack(">H", seg[:2])[0]
-        elif m == 0xDA:  # SOS — entropy data follows
-            segments, pos = _split_entropy(p, pos)
-            if frame is None:
-                raise ValueError("SOS before SOF")
-            if frame["progressive"]:
-                _decode_progressive_scan(
-                    segments, seg, frame, coefs, huff_dc, huff_ac,
-                    restart_interval,
-                )
-            else:
-                ns = seg[0]
-                scan = {}
-                for c in range(ns):
-                    cid, tt = seg[1 + 2 * c], seg[2 + 2 * c]
-                    scan[cid] = (tt >> 4, tt & 15)
-                return _decode_scan(segments, frame, scan, qt,
-                                    huff_dc, huff_ac, restart_interval)
-        elif m in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
-                   0xCD, 0xCE, 0xCF):
-            raise ValueError("unsupported JPEG coding process")
-        # else: APPn/COM — skip
-    if frame is not None and frame.get("progressive") and coefs is not None:
-        return _reconstruct_progressive(frame, coefs, qt)
-    raise ValueError("no SOS")
-
-
-# -- progressive geometry -----------------------------------------------------
-
-def _geometry(frame):
-    comps = frame["comps"]
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcux = -(-frame["w"] // (8 * hmax))
-    mcuy = -(-frame["h"] // (8 * vmax))
-    return hmax, vmax, mcux, mcuy
-
-
-def _comp_blocks(frame, c):
-    """Unpadded block grid of one component (non-interleaved scans
-    iterate exactly these; T.81 A.2.2)."""
-    hmax, vmax, _, _ = _geometry(frame)
-    sw = -(-frame["w"] * c["h"] // hmax)
-    sh = -(-frame["h"] * c["v"] // vmax)
-    return -(-sh // 8), -(-sw // 8)
-
-
-def _alloc_coefs(frame):
-    """Zigzag-ordered int32 coefficient grids, padded to the MCU grid
-    (interleaved DC scans cover the padding blocks too)."""
-    _, _, mcux, mcuy = _geometry(frame)
-    return [
-        np.zeros((mcuy * c["v"], mcux * c["h"], 64), dtype=np.int32)
-        for c in frame["comps"]
-    ]
-
-
-def _decode_progressive_scan(segments, seg, frame, coefs, huff_dc, huff_ac, ri):
-    ns = seg[0]
-    in_scan = []  # (comp index, dc table, ac table)
-    for c in range(ns):
-        cid, tt = seg[1 + 2 * c], seg[2 + 2 * c]
-        ci = next(
-            i for i, cc in enumerate(frame["comps"]) if cc["id"] == cid
-        )
-        in_scan.append((ci, tt >> 4, tt & 15))
-    ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-    ahal = seg[3 + 2 * ns]
-    ah, al = ahal >> 4, ahal & 15
-    r = _BitReader(segments)
-    if ss == 0:
-        _scan_dc(r, frame, coefs, in_scan, huff_dc, ah, al, ri)
-    else:
-        ci, _, ta = in_scan[0]  # AC scans are single-component (T.81)
-        if ah == 0:
-            _scan_ac_first(r, frame, coefs[ci], frame["comps"][ci],
-                           huff_ac[ta], ss, se, al, ri)
-        else:
-            _scan_ac_refine(r, frame, coefs[ci], frame["comps"][ci],
-                            huff_ac[ta], ss, se, al, ri)
-
-
-def _scan_dc(r, frame, coefs, in_scan, huff_dc, ah, al, ri):
-    """DC scan: first pass (Ah=0, huffman diffs, shifted by Al) or
-    refinement (one correction bit per block). Interleaved in MCU
-    order when ns > 1, else the component's own block order."""
-    _, _, mcux, mcuy = _geometry(frame)
-    pred = {ci: 0 for ci, _, _ in in_scan}
-    if len(in_scan) > 1:  # interleaved: MCU order over the padded grid
-        units = []
-        for mcu in range(mcux * mcuy):
-            my, mx = divmod(mcu, mcux)
-            group = []
-            for ci, td, _ in in_scan:
-                c = frame["comps"][ci]
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        group.append(
-                            (ci, td, my * c["v"] + by, mx * c["h"] + bx)
-                        )
-            units.append(group)
-    else:
-        ci, td, _ = in_scan[0]
-        bh, bw = _comp_blocks(frame, frame["comps"][ci])
-        units = [
-            [(ci, td, by, bx)]
-            for by in range(bh)
-            for bx in range(bw)
-        ]
-    for u, group in enumerate(units):
-        if ri and u and u % ri == 0:
-            r.next_segment()
-            pred = {k: 0 for k in pred}
-        for ci, td, by, bx in group:
-            if ah == 0:
-                s = r.huff(huff_dc[td])
-                diff = _extend(r.read_bits(s), s) if s else 0
-                pred[ci] += diff
-                coefs[ci][by, bx, 0] = pred[ci] << al
-            else:
-                if r.read_bit():
-                    coefs[ci][by, bx, 0] |= 1 << al
-
-
-def _scan_ac_first(r, frame, coef, c, act, ss, se, al, ri):
-    bh, bw = _comp_blocks(frame, c)
-    eobrun = 0
-    n = 0
-    for by in range(bh):
-        for bx in range(bw):
-            if ri and n and n % ri == 0:
-                r.next_segment()
-                eobrun = 0
-            n += 1
-            if eobrun > 0:
-                eobrun -= 1
-                continue
-            blk = coef[by, bx]
-            k = ss
-            while k <= se:
-                rs = r.huff(act)
-                run, size = rs >> 4, rs & 15
-                if size:
-                    k += run
-                    blk[k] = _extend(r.read_bits(size), size) << al
-                    k += 1
-                else:
-                    if run != 15:
-                        eobrun = (1 << run) - 1
-                        if run:
-                            eobrun += r.read_bits(run)
-                        break
-                    k += 16  # ZRL
-    return
-
-
-def _scan_ac_refine(r, frame, coef, c, act, ss, se, al, ri):
-    """Successive-approximation AC refinement (T.81 G.1.2.3 /
-    libjpeg decode_mcu_AC_refine): already-nonzero coefficients get
-    correction bits; new coefficients arrive with magnitude 1<<Al;
-    EOB runs carry correction bits for the remaining band."""
-    p1, m1 = 1 << al, -(1 << al)
-    bh, bw = _comp_blocks(frame, c)
-    eobrun = 0
-    n = 0
-    for by in range(bh):
-        for bx in range(bw):
-            if ri and n and n % ri == 0:
-                r.next_segment()
-                eobrun = 0
-            n += 1
-            blk = coef[by, bx]
-            k = ss
-            if eobrun == 0:
-                while k <= se:
-                    rs = r.huff(act)
-                    run, size = rs >> 4, rs & 15
-                    if size == 0:
-                        if run != 15:
-                            eobrun = 1 << run
-                            if run:
-                                eobrun += r.read_bits(run)
-                            break
-                        newval = 0  # ZRL: skip 16 zero-history coeffs
-                    else:  # size must be 1 in a refinement scan
-                        newval = p1 if r.read_bit() else m1
-                    while k <= se:
-                        v = int(blk[k])
-                        if v != 0:
-                            if r.read_bit() and (v & p1) == 0:
-                                blk[k] = v + (p1 if v >= 0 else m1)
-                        else:
-                            if run == 0:
-                                break
-                            run -= 1
-                        k += 1
-                    if newval and k <= se:
-                        blk[k] = newval
-                    k += 1
-            if eobrun > 0:
-                # correction bits for the rest of the band
-                while k <= se:
-                    v = int(blk[k])
-                    if v != 0 and r.read_bit() and (v & p1) == 0:
-                        blk[k] = v + (p1 if v >= 0 else m1)
-                    k += 1
-                eobrun -= 1
-
-
-def _reconstruct_progressive(frame, coefs, qt):
-    comps = frame["comps"]
-    h, w = frame["h"], frame["w"]
-    hmax, vmax, mcux, mcuy = _geometry(frame)
-    planes = []
-    for c, grid in zip(comps, coefs):
-        q = qt[c["tq"]]
-        bh, bw = grid.shape[:2]
-        pl = np.zeros((bh * 8, bw * 8))
-        for by in range(bh):
-            for bx in range(bw):
-                blk = np.zeros(64)
-                blk[ZIGZAG] = grid[by, bx] * q
-                pl[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = (
-                    _D.T @ blk.reshape(8, 8) @ _D + 128.0
-                )
-        planes.append(pl)
-    return _planes_to_rgb(comps, planes, h, w, hmax, vmax)
-
-
-def _decode_scan(segments, frame, scan, qt, huff_dc, huff_ac, ri):
-    r = _BitReader(segments)
-
-    comps = frame["comps"]
-    h, w = frame["h"], frame["w"]
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    planes = [
-        np.zeros((mcuy * c["v"] * 8, mcux * c["h"] * 8)) for c in comps
-    ]
-    pred = [0] * len(comps)
-    n_mcu = mcux * mcuy
-    for mcu in range(n_mcu):
-        if ri and mcu and mcu % ri == 0:
-            r.next_segment()
-            pred = [0] * len(comps)
-        my, mx = divmod(mcu, mcux)
-        for ci, c in enumerate(comps):
-            td, ta = scan[c["id"]]
-            dct, act = huff_dc[td], huff_ac[ta]
-            q = qt[c["tq"]]
-            for by in range(c["v"]):
-                for bx in range(c["h"]):
-                    zz = np.zeros(64)
-                    s = r.huff(dct)
-                    diff = _extend(r.read_bits(s), s) if s else 0
-                    pred[ci] += diff
-                    zz[0] = pred[ci]
-                    k = 1
-                    while k < 64:
-                        rs = r.huff(act)
-                        run, size = rs >> 4, rs & 15
-                        if size == 0:
-                            if run == 15:
-                                k += 16
-                                continue
-                            break  # EOB
-                        k += run
-                        zz[k] = _extend(r.read_bits(size), size)
-                        k += 1
-                    blk = np.zeros(64)
-                    blk[ZIGZAG] = zz * q
-                    sp = _D.T @ blk.reshape(8, 8) @ _D + 128.0
-                    y0 = (my * c["v"] + by) * 8
-                    x0 = (mx * c["h"] + bx) * 8
-                    planes[ci][y0:y0 + 8, x0:x0 + 8] = sp
-    return _planes_to_rgb(comps, planes, h, w, hmax, vmax)
-
-
-def _planes_to_rgb(comps, planes, h, w, hmax, vmax):
-    """Upsample component planes to full resolution, crop, and color
-    convert (shared by the baseline and progressive paths)."""
-    full = []
-    for c, pl in zip(comps, planes):
-        pl = np.repeat(np.repeat(pl, vmax // c["v"], 0), hmax // c["h"], 1)
-        full.append(pl[:h, :w])
-    if len(full) == 1:
-        g = np.clip(full[0].round(), 0, 255).astype(np.uint8)
-        return np.stack([g] * 3, axis=2)
-    y, cb, cr = full[0], full[1] - 128.0, full[2] - 128.0
-    rgb = np.stack(
-        [
-            y + 1.402 * cr,
-            y - 0.344136 * cb - 0.714136 * cr,
-            y + 1.772 * cb,
-        ],
-        axis=2,
-    )
-    return np.clip(rgb.round(), 0, 255).astype(np.uint8)
 
 
 # -- encoder (fixture writer) ------------------------------------------------
@@ -729,284 +266,4 @@ def encode_jpeg(img, quality: int = 90, subsampling: str = "444",
         out += seg(0xDD, struct.pack(">H", restart_interval))
     out += seg(0xDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]))
     out += ecs + b"\xff\xd9"
-    return bytes(out)
-
-
-# -- progressive encoder (fixture writer) -------------------------------------
-
-def _quantized_grids(img, quality: int, subsampling: str):
-    """Color-transform, pad, and quantize the image into per-component
-    zigzag coefficient grids (the shared front half of both encoders)."""
-    img = np.asarray(img, dtype=np.float64)
-    h, w = img.shape[:2]
-    y = (0.299 * img[..., 0] + 0.587 * img[..., 1] + 0.114 * img[..., 2])
-    cb = 128.0 - 0.168736 * img[..., 0] - 0.331264 * img[..., 1] + 0.5 * img[..., 2]
-    cr = 128.0 + 0.5 * img[..., 0] - 0.418688 * img[..., 1] - 0.081312 * img[..., 2]
-    qly = _scaled_qt(QT_LUM, quality)
-    qlc = _scaled_qt(QT_CHROM, quality)
-    sub = 2 if subsampling == "420" else 1
-    mcu = 8 * sub
-    mcux, mcuy = -(-w // mcu), -(-h // mcu)
-
-    def pad(pl, ph, pw):
-        out = np.empty((ph, pw))
-        out[: pl.shape[0], : pl.shape[1]] = pl
-        out[pl.shape[0]:, : pl.shape[1]] = pl[-1:]
-        out[:, pl.shape[1]:] = out[:, pl.shape[1] - 1:pl.shape[1]]
-        return out
-
-    if sub == 2:
-        yp = pad(y, mcuy * 16, mcux * 16)
-        cbp = pad(cb, mcuy * 16, mcux * 16)
-        crp = pad(cr, mcuy * 16, mcux * 16)
-        cbl = cbp.reshape(mcuy * 8, 2, mcux * 8, 2).mean(axis=(1, 3))
-        crl = crp.reshape(mcuy * 8, 2, mcux * 8, 2).mean(axis=(1, 3))
-    else:
-        yp = pad(y, mcuy * 8, mcux * 8)
-        cbl = pad(cb, mcuy * 8, mcux * 8)
-        crl = pad(cr, mcuy * 8, mcux * 8)
-
-    def grid(pl, q):
-        bh, bw = pl.shape[0] // 8, pl.shape[1] // 8
-        g = np.zeros((bh, bw, 64), dtype=np.int32)
-        for by in range(bh):
-            for bx in range(bw):
-                blk = pl[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8]
-                coeffs = _D @ (blk - 128.0) @ _D.T
-                g[by, bx] = np.rint(
-                    coeffs.reshape(64)[ZIGZAG] / q[ZIGZAG]
-                ).astype(np.int32)
-        return g
-
-    grids = [grid(yp, qly), grid(cbl, qlc), grid(crl, qlc)]
-    comps = [
-        {"id": 1, "h": sub, "v": sub, "tq": 0},
-        {"id": 2, "h": 1, "v": 1, "tq": 1},
-        {"id": 3, "h": 1, "v": 1, "tq": 1},
-    ]
-    return comps, grids, qly, qlc, h, w, mcux, mcuy
-
-
-class _ProgWriter(_BitWriter):
-    """BitWriter + the EOB-run / buffered-correction-bit protocol of
-    T.81 Annex G (libjpeg emit_eobrun/emit_buffered_bits)."""
-
-    def __init__(self, enc_ac=None):
-        super().__init__()
-        self.enc_ac = enc_ac
-        self.eobrun = 0
-        self.be: list[int] = []  # correction bits pending with the EOB run
-
-    def sym(self, s: int) -> None:
-        self.write(*self.enc_ac[s])
-
-    def emit_eobrun(self) -> None:
-        if self.eobrun > 0:
-            nbits = self.eobrun.bit_length() - 1
-            self.sym(nbits << 4)
-            if nbits:
-                self.write(self.eobrun & ((1 << nbits) - 1), nbits)
-            for b in self.be:
-                self.write(b, 1)
-            self.be = []
-            self.eobrun = 0
-
-
-def _enc_dc_scan(grids, comps, in_scan, mcux, mcuy, ah, al) -> bytes:
-    wr = _BitWriter()
-    pred = {ci: 0 for ci, _ in in_scan}
-    for m in range(mcux * mcuy):
-        my, mx = divmod(m, mcux)
-        for ci, table in in_scan:
-            c = comps[ci]
-            for by in range(c["v"]):
-                for bx in range(c["h"]):
-                    v = int(grids[ci][my * c["v"] + by, mx * c["h"] + bx, 0])
-                    if ah == 0:
-                        t = v >> al  # arithmetic shift, like the decoder's <<
-                        diff = t - pred[ci]
-                        pred[ci] = t
-                        s = abs(diff).bit_length()
-                        wr.write(*table[s])
-                        if s:
-                            wr.write(
-                                (diff if diff >= 0 else diff + (1 << s) - 1), s
-                            )
-                    else:
-                        wr.write((v >> al) & 1, 1)
-    wr.flush()
-    return bytes(wr.out)
-
-
-def _enc_ac_first_scan(grid, enc_ac, ss, se, al, blocks=None) -> bytes:
-    wr = _ProgWriter(enc_ac)
-    bh, bw = blocks or grid.shape[:2]  # non-interleaved: UNPADDED grid
-    for by in range(bh):
-        for bx in range(bw):
-            blk = grid[by, bx]
-            run = 0
-            for k in range(ss, se + 1):
-                v = int(blk[k])
-                t = (-v) >> al if v < 0 else v >> al
-                if t == 0:
-                    run += 1
-                    continue
-                wr.emit_eobrun()
-                while run > 15:
-                    wr.sym(0xF0)  # ZRL
-                    run -= 16
-                nbits = t.bit_length()
-                wr.sym((run << 4) | nbits)
-                t2 = t if v >= 0 else ~t  # low nbits encode sign, T.81 F.1.2.2
-                wr.write(t2 & ((1 << nbits) - 1), nbits)
-                run = 0
-            if run > 0:
-                wr.eobrun += 1
-                if wr.eobrun == 0x7FFF:
-                    wr.emit_eobrun()
-    wr.emit_eobrun()
-    wr.flush()
-    return bytes(wr.out)
-
-
-def _enc_ac_refine_scan(grid, enc_ac, ss, se, al, blocks=None) -> bytes:
-    """T.81 G.1.2.3 successive-approximation AC refinement encoder
-    (libjpeg encode_mcu_AC_refine): new ±1<<Al coefficients are coded
-    as run/size symbols; already-significant coefficients ride along
-    as buffered correction bits attached to the next symbol or EOB run."""
-    wr = _ProgWriter(enc_ac)
-    bh, bw = blocks or grid.shape[:2]  # non-interleaved: UNPADDED grid
-    for by in range(bh):
-        for bx in range(bw):
-            blk = grid[by, bx]
-            absv = [abs(int(blk[k])) >> al for k in range(ss, se + 1)]
-            eob = ss - 1  # position of the last NEWLY-significant coef
-            for i, t in enumerate(absv):
-                if t == 1:
-                    eob = ss + i
-            run = 0
-            br: list[int] = []  # correction bits buffered in this block
-            for k in range(ss, se + 1):
-                t = absv[k - ss]
-                if t == 0:
-                    run += 1
-                    continue
-                while run > 15 and k <= eob:
-                    wr.emit_eobrun()
-                    wr.sym(0xF0)
-                    run -= 16
-                    for b in br:
-                        wr.write(b, 1)
-                    br = []
-                if t > 1:  # already significant: correction bit only
-                    br.append(t & 1)
-                    continue
-                wr.emit_eobrun()
-                wr.sym((run << 4) | 1)
-                wr.write(0 if int(blk[k]) < 0 else 1, 1)
-                for b in br:
-                    wr.write(b, 1)
-                br = []
-                run = 0
-            if run > 0 or br:
-                wr.eobrun += 1
-                wr.be.extend(br)
-                if wr.eobrun == 0x7FFF:
-                    wr.emit_eobrun()
-    wr.emit_eobrun()
-    wr.flush()
-    return bytes(wr.out)
-
-
-# Progressive AC scans emit EOBn symbols (run<<4 with size 0, n>0)
-# that Annex K's baseline tables don't contain; ship a flat canonical
-# table instead: every (run, size 0-14) symbol + ZRL at 9 bits
-# (512-code space, all-ones code unused as T.81 requires).
-AC_PROG_VALS = [
-    (r << 4) | s for r in range(16) for s in range(15)
-]
-AC_PROG_BITS = [0] * 16
-AC_PROG_BITS[8] = len(AC_PROG_VALS)  # all codes 9 bits long
-
-
-def encode_jpeg_progressive(img, quality: int = 90,
-                            subsampling: str = "444") -> bytes:
-    """uint8 RGB (h, w, 3) → progressive (SOF2) JFIF bytes with a scan
-    script exercising all four scan kinds: interleaved DC first (Al=1),
-    DC refinement, per-component AC first in two spectral bands (Al=1),
-    and per-component AC refinement (Al=0) — the decoder-side test
-    fixture for the successive-approximation paths."""
-    comps, grids, qly, qlc, h, w, mcux, mcuy = _quantized_grids(
-        img, quality, subsampling
-    )
-    enc = {
-        "dc_l": _encode_table(DC_LUM_BITS, DC_LUM_VALS),
-        "ac_l": _encode_table(AC_PROG_BITS, AC_PROG_VALS),
-        "dc_c": _encode_table(DC_CHROM_BITS, DC_CHROM_VALS),
-        "ac_c": _encode_table(AC_PROG_BITS, AC_PROG_VALS),
-    }
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    def sos(comp_specs, ss, se, ah, al):
-        body = bytes([len(comp_specs)])
-        for cid, td, ta in comp_specs:
-            body += bytes([cid, (td << 4) | ta])
-        return seg(0xDA, body + bytes([ss, se, (ah << 4) | al]))
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xDB, b"\x00" + bytes(qly[ZIGZAG].astype(np.uint8)))
-    out += seg(0xDB, b"\x01" + bytes(qlc[ZIGZAG].astype(np.uint8)))
-    sof = bytes([8]) + struct.pack(">HH", h, w) + bytes([3])
-    for c in comps:
-        sof += bytes([c["id"], (c["h"] << 4) | c["v"], c["tq"]])
-    out += seg(0xC2, sof)  # SOF2: progressive DCT
-    for tc, th, bits, vals in (
-        (0, 0, DC_LUM_BITS, DC_LUM_VALS), (1, 0, AC_PROG_BITS, AC_PROG_VALS),
-        (0, 1, DC_CHROM_BITS, DC_CHROM_VALS), (1, 1, AC_PROG_BITS, AC_PROG_VALS),
-    ):
-        out += seg(0xC4, bytes([(tc << 4) | th] + bits + vals))
-
-    all_comps = [(1, 0, 0), (2, 1, 1), (3, 1, 1)]
-    # scan 1: DC first, interleaved, Al=1
-    out += sos(all_comps, 0, 0, 0, 1)
-    out += _enc_dc_scan(
-        grids, comps, [(0, enc["dc_l"]), (1, enc["dc_c"]), (2, enc["dc_c"])],
-        mcux, mcuy, 0, 1,
-    )
-    # scan 2: DC refinement, Ah=1, Al=0
-    out += sos(all_comps, 0, 0, 1, 0)
-    out += _enc_dc_scan(
-        grids, comps, [(0, enc["dc_l"]), (1, enc["dc_c"]), (2, enc["dc_c"])],
-        mcux, mcuy, 1, 0,
-    )
-    # per-component AC: two spectral bands first (Al=1), then refine (Al=0)
-    bands = [(1, 5), (6, 63)]
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-
-    def unpadded(c):
-        # T.81 A.2.2: non-interleaved scans cover the component's OWN
-        # block grid, not the MCU-padded one
-        sw = -(-w * c["h"] // hmax)
-        sh = -(-h * c["v"] // vmax)
-        return -(-sh // 8), -(-sw // 8)
-
-    for ci, ac in ((0, "ac_l"), (1, "ac_c"), (2, "ac_c")):
-        cid, _, ta = all_comps[ci]
-        for ss, se in bands:
-            out += sos([(cid, 0, ta)], ss, se, 0, 1)
-            out += _enc_ac_first_scan(
-                grids[ci], enc[ac], ss, se, 1, blocks=unpadded(comps[ci])
-            )
-    for ci, ac in ((0, "ac_l"), (1, "ac_c"), (2, "ac_c")):
-        cid, _, ta = all_comps[ci]
-        for ss, se in bands:
-            out += sos([(cid, 0, ta)], ss, se, 1, 0)
-            out += _enc_ac_refine_scan(
-                grids[ci], enc[ac], ss, se, 0, blocks=unpadded(comps[ci])
-            )
-    out += b"\xff\xd9"
     return bytes(out)

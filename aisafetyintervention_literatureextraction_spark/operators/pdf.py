@@ -53,7 +53,7 @@ stdlib-only (``re`` + ``zlib``):
   UTF-16BE BOM switches the byte decode, else PDFDocEncoding is
   approximated as Latin-1.
 
-Spark integration is the multimodal batch-shape contract: Arrow-batched
+Spark integration is the binary-column batch contract: Arrow-batched
 ``mapInPandas`` over the ``binaryFile`` scan's ``content`` column —
 per-file decode parallelizes across executors and undecodable files
 quarantine as null text instead of aborting the batch.
@@ -648,7 +648,7 @@ def _lzw_decode(data: bytes, early_change: int = 1) -> bytes:
 def _png_unpredict(data: bytes, columns: int, colors: int = 1,
                    bpc: int = 8) -> bytes:
     """Undo PNG row predictors (Predictor >= 10) on a decoded stream —
-    same per-row filter dispatch as the PNG decoder in multimodal.py."""
+    the PNG spec's per-row filter dispatch (None/Sub/Up/Average/Paeth)."""
     bpp = max(1, (colors * bpc) // 8)
     rowlen = (columns * colors * bpc + 7) // 8
     out = bytearray()
@@ -1585,7 +1585,7 @@ def decode_pdf_text(files: DataFrame, with_images: bool = False) -> DataFrame:
     bytes already are (no shuffle — the scan's file splits are the
     parallelism), and an undecodable file yields null text plus a
     classified ``decode_error`` reason instead of failing the stage
-    (quarantine-style, as in multimodal decode).
+    (quarantine-style).
 
     ``with_images=True`` adds an ``images`` array<struct> column from
     the SAME parse — when a pipeline needs both text and embedded
@@ -1645,13 +1645,13 @@ def decode_pdf_text(files: DataFrame, with_images: bool = False) -> DataFrame:
 
 
 # ---------------------------------------------------------------------
-# embedded images → multimodal columns
+# embedded images → image columns
 # ---------------------------------------------------------------------
 
 def iter_page_images(doc: PdfDocument, page: dict) -> list[dict]:
     """One page's /Resources /XObject images as metadata + bytes:
-    DCTDecode XObjects pass through as ready-to-decode JFIF bytes
-    (operators/jpeg.decode_jpeg handles them), everything else fully
+    DCTDecode XObjects pass through as the embedded JFIF bytes,
+    unchanged, everything else fully
     defilters to the raw sample bytes described by Width/Height/
     BitsPerComponent/ColorSpace.  Form XObjects are walked for their
     nested images (the common LaTeX/matplotlib figure wrapper); one
@@ -1750,10 +1750,9 @@ PDF_DOC_IMG_SCHEMA = StructType(
 
 def extract_pdf_images(files: DataFrame) -> DataFrame:
     """(doc_id, content) binaryFile rows → one row per embedded image
-    (the multimodal-columns contract: opaque ``binary`` payload +
-    typed metadata).  DCTDecode images stay JPEG — feed them to
-    operators/jpeg.decode_jpeg or the multimodal feature UDFs; ``raw``
-    rows carry defiltered samples with their geometry.  Arrow-batched
+    (opaque ``binary`` payload + typed metadata).  DCTDecode images
+    stay JPEG, byte for byte as embedded; ``raw`` rows carry
+    defiltered samples with their geometry.  Arrow-batched
     ``mapInPandas``, per-file decode where the bytes are, undecodable
     files contribute zero rows (text-path quarantine already covers
     them)."""

@@ -16,6 +16,7 @@ Designed to be submitted as ``spark-submit --py-files kgspark.zip
 from __future__ import annotations
 
 import argparse
+import os
 import time
 from dataclasses import dataclass
 
@@ -25,7 +26,6 @@ from pyspark.sql import functions as F
 from .. import checkpoint as ckpt
 from ..catalog import Catalog
 from ..functions import caching
-from ..iceberg_backend import make_catalog
 from ..operators.canonicalize import (
     alias_identity_edges,
     bucket_join_pairs,
@@ -58,7 +58,6 @@ class PipelineConfig:
     cosine_threshold: float = 0.6
     resume: bool = True
     allow_gaps: bool = False               # sparse turn indices OK (no quarantine)
-    catalog_backend: str = "auto"          # "auto" | "manifest" | "iceberg"
     analytics: bool = False                # stage E: kg_node_metrics table
     analytics_weighted: bool = False       # stage E PageRank: evidence weights
 
@@ -284,13 +283,15 @@ def stage_c_canonicalize(cat: Catalog, cfg: PipelineConfig) -> DataFrame:
             cosine_threshold=cfg.cosine_threshold,
         )
         nodes = caching.track(nodes)
-        n_signed = nodes.count()
         cat.overwrite(node_bucket_rows(nodes), "node_buckets", run_id=run_id)
         edges, n_pairs = _counted(edges)
         cat.overwrite(edges, "node_pairs", run_id=run_id)
         comps = connected_components(nodes.select("node_id"), cat.read("node_pairs"))
         cat.overwrite(comps, "components", run_id=run_id)
-        cat.overwrite(nodes, "candidate_nodes", run_id=run_id)
+        # every candidate node is signed on the full path
+        observed, n_nodes = _counted(nodes)
+        cat.overwrite(observed, "candidate_nodes", run_id=run_id)
+        n_signed = n_nodes.get["n"]
         nodes.unpersist()
     else:
         delta_raw = caching.track(ckpt.pending(cat, "C_canonicalize", nodes_raw))
@@ -581,61 +582,158 @@ def stage_e_analytics(cat: Catalog, cfg: PipelineConfig):
     })
 
 
+FORMATS = ("transcripts", "pdf", "ard")
+
+
+def inapplicable_option(
+    fmt: str, stream: bool, *, cd_every: int | None = None,
+    glob: str | None = None, extract_images: bool = False,
+    modified_after: str | None = None, allow_gaps: bool = False,
+) -> str | None:
+    """Why an option would be silently dropped by a ``fmt``/``stream``
+    run, or None when every given option applies.  Shared by
+    :func:`run_pipeline` (ValueError) and the CLI (usage error)."""
+    if fmt not in FORMATS:
+        return f"unknown source format {fmt!r}; expected one of {FORMATS}"
+    if cd_every is not None and not stream:
+        return "cd_every (--cd-every) applies to stream runs only"
+    if (extract_images or modified_after is not None) and (fmt != "pdf" or stream):
+        return ("extract_images (--extract-images) and modified_after "
+                "(--modified-after) apply to batch PDF runs only")
+    if glob is not None and fmt != "pdf":
+        return "glob applies to PDF runs only"
+    if allow_gaps and (fmt != "transcripts" or stream):
+        return "allow_gaps applies to batch transcript runs only"
+    return None
+
+
 def run_pipeline(
-    spark: SparkSession, transcripts: DataFrame, warehouse: str, **kwargs
+    spark: SparkSession, source, warehouse: str, *, fmt: str = "transcripts",
+    stream: bool = False, cd_every: int | None = None, glob: str | None = None,
+    extract_images: bool = False, modified_after: str | None = None,
+    **kwargs,
 ) -> dict:
+    """The pipeline over one source: stage A through the ``fmt``
+    document adapter, then stages B-D (E with ``analytics=True``),
+    bookkeeping compaction and the run stats.
+
+    ``fmt`` picks the source: ``"transcripts"`` (a transcripts
+    DataFrame or parquet path), ``"pdf"`` (a directory of PDFs: stdlib
+    text extraction, undecodable files quarantine) or ``"ard"`` (an ARD
+    article JSONL/gzip path or directory: doc id = url, text =
+    title+abstract+text, title/authors provenance).  ``stream=True``
+    drains ``source`` (a directory) as an exactly-once AvailableNow
+    stream running stages A+B per micro-batch
+    (streaming/catalog_sink.py); ``cd_every=k`` also runs the
+    delta-aware C+D trigger inside the stream after every k-th
+    micro-batch, and the post-drain C+D pass then only fires if the
+    final batches missed a trigger boundary.  Stream and batch write
+    the same processed sets, so either composes with the other on one
+    warehouse, and re-running resumes (already-ingested ids skip).
+
+    PDF-only keywords: ``glob`` (default ``*.pdf``); on batch runs
+    ``modified_after`` (listing-level high-water mark) and
+    ``extract_images=True``, which also lands every embedded /XObject
+    image in the ``images`` table (typed metadata + binary payload;
+    DCTDecode stays JPEG) from the same parse as the text.  An option
+    the chosen source and mode cannot apply raises ValueError.
+
+    Returns ``wall_s``, ``n_triples``, ``triples_per_sec``,
+    ``n_kg_nodes``, ``n_kg_edges`` (plus ``n_images`` with
+    ``extract_images``)."""
+    why = inapplicable_option(
+        fmt, stream, cd_every=cd_every, glob=glob,
+        extract_images=extract_images, modified_after=modified_after,
+        allow_gaps=kwargs.get("allow_gaps", False),
+    )
+    if why:
+        raise ValueError(why)
     cfg = PipelineConfig(warehouse=warehouse, **kwargs)
-    # dispatches to the native Iceberg runtime when one is configured
-    # (iceberg_backend.make_catalog); the manifest catalog otherwise
-    cat = make_catalog(spark, warehouse, backend=cfg.catalog_backend)
+    cat = Catalog(spark, warehouse)
     t0 = time.time()
-    stage_a_reassemble(cat, transcripts, cfg)
-    stage_b_extract(cat, cfg)
-    stage_c_canonicalize(cat, cfg)
-    stage_d_materialize(cat, cfg)
+    if stream:
+        state = _stream_ab(spark, cat, cfg, fmt, source, cd_every, glob)
+        catch_up = not state["cd_on_last"]
+    else:
+        _ingest_batch(spark, cat, cfg, fmt, source, glob or "*.pdf",
+                      extract_images, modified_after)
+        stage_b_extract(cat, cfg)
+        catch_up = True
+    if catch_up:
+        stage_c_canonicalize(cat, cfg)
+        stage_d_materialize(cat, cfg)
     if cfg.analytics:
         stage_e_analytics(cat, cfg)
     # table maintenance: bound manifest growth on the append-heavy
-    # bookkeeping tables (amortized — fires once per ~64 commits);
-    # vacuum reclaims the superseded commit dirs past a 4-version
-    # time-travel horizon
+    # bookkeeping tables (amortized — fires once per ~64 commits; a
+    # stream appends a state entry per micro-batch); vacuum reclaims
+    # the superseded commit dirs past a 4-version time-travel horizon
     for t in (ckpt.STATE, ckpt.LINEAGE, ckpt.METRICS):
         if cat.maybe_compact(t):
             cat.vacuum(t, keep_versions=4)
     caching.release_caches()  # reclaim operator-tracked intermediates
     wall = time.time() - t0
     n_triples = cat.read("triples_raw").count()
-    return {
+    stats = {
         "wall_s": wall,
         "n_triples": n_triples,
         "triples_per_sec": n_triples / wall,
         "n_kg_nodes": cat.read("kg_nodes").count(),
         "n_kg_edges": cat.read("kg_edges").count(),
     }
+    if extract_images:
+        stats["n_images"] = cat.read("images").count()
+    return stats
 
 
-def run_pipeline_pdfs(
-    spark: SparkSession, pdf_dir: str, warehouse: str, glob: str = "*.pdf",
-    extract_images: bool = False, modified_after: str | None = None,
-    **kwargs,
-) -> dict:
-    """The reference's own input format end-to-end: a directory of PDF
-    files → binaryFile scan → stdlib text extraction (operators/pdf.py,
-    Arrow-batched) → documents → stages B-D. Undecodable PDFs
-    quarantine instead of failing the run; resume semantics are the
-    transcript pipeline's (re-running skips already-ingested stems).
-    ``extract_images=True`` also lands every embedded /XObject image
-    as a row in the ``images`` warehouse table (multimodal-columns
-    shape: typed metadata + binary payload; DCTDecode stays JPEG) —
-    from the SAME parse as the text, so the corpus is scanned once,
-    not once per output."""
+def _stream_ab(spark: SparkSession, cat: Catalog, cfg: PipelineConfig,
+               fmt: str, source: str, cd_every: int | None,
+               glob: str | None) -> dict:
+    """Stream adapter: stages A+B (and C+D every ``cd_every``
+    micro-batches) through the ``fmt`` catalog sink; returns its
+    batch/trigger state."""
+    from ..streaming import catalog_sink as sink
+
+    kw = dict(
+        checkpoint_path=os.path.join(cfg.warehouse, "_stream_ckpt"),
+        extract_engine=cfg.extract_engine, cd_every=cd_every, cd_cfg=cfg,
+    )
+    if fmt == "transcripts":
+        return sink.stream_pipeline_to_catalog(
+            spark, source, cat, salt_segment=cfg.salt_segment, **kw)
+    if fmt == "pdf":
+        return sink.stream_pdf_pipeline_to_catalog(
+            spark, source, cat, glob=glob or "*.pdf", **kw)
+    return sink.stream_ard_pipeline_to_catalog(spark, source, cat, **kw)
+
+
+def _ingest_batch(spark: SparkSession, cat: Catalog, cfg: PipelineConfig,
+                  fmt: str, source, glob: str, extract_images: bool,
+                  modified_after: str | None) -> None:
+    """Batch adapter: stage A over the ``fmt`` source.  PDFs go
+    binaryFile scan → stdlib text extraction (operators/pdf.py,
+    Arrow-batched); with ``extract_images`` the ``images`` table lands
+    from the same parse."""
+    if fmt == "transcripts":
+        if isinstance(source, str):
+            from ..sources.transcripts import read_transcripts
+
+            source = read_transcripts(spark, source)
+        stage_a_reassemble(cat, source, cfg)
+        return
+    if fmt == "ard":
+        from ..sources.ard import ard_as_documents, read_ard
+
+        docs = ard_as_documents(read_ard(spark, source)).filter(
+            F.col("conv_id").isNotNull()  # no url AND no title: unkeyable
+        )
+        stage_a_ingest_documents(cat, docs, cfg)
+        return
+
     from ..operators.pdf import decode_pdf_text
     from ..sources.raw_files import read_raw_files, skip_processed
 
-    cfg = PipelineConfig(warehouse=warehouse, **kwargs)
-    cat = make_catalog(spark, warehouse, backend=cfg.catalog_backend)
-    t0 = time.time()
-    files = read_raw_files(spark, pdf_dir, glob=glob,
+    files = read_raw_files(spark, source, glob=glob,
                            modified_after=modified_after)
     doc_cols = ("conv_id", F.col("n_pages").alias("n_turns"), "doc_text",
                 "title", "author",  # /Info provenance → documents → D
@@ -651,7 +749,7 @@ def run_pipeline_pdfs(
                if cfg.resume else files)
         stage_a_ingest_documents(cat, decode_pdf_text(src).select(*doc_cols),
                                  cfg)
-        return _run_bcd_and_stats(cat, cfg, t0)
+        return
 
     # text + images from ONE parse: a file is parsed iff it is pending
     # for at least one of the two outputs; each output then re-filters
@@ -683,158 +781,11 @@ def run_pipeline_pdfs(
     # documents, which a delta-derived mark would re-parse forever
     ckpt.mark_processed(cat, "A_images", img_run,
                         img_src.select("conv_id").distinct())
-    stats_extra = {"n_images": cat.read("images").count()}
     delta.unpersist()
     combined.unpersist()
-    return {**_run_bcd_and_stats(cat, cfg, t0), **stats_extra}
 
 
-def _run_bcd_and_stats(cat: Catalog, cfg: PipelineConfig, t0: float) -> dict:
-    """Shared tail of every batch runner: stages B-D, bookkeeping
-    compaction, cache release, run stats."""
-    stage_b_extract(cat, cfg)
-    stage_c_canonicalize(cat, cfg)
-    stage_d_materialize(cat, cfg)
-    if cfg.analytics:
-        stage_e_analytics(cat, cfg)
-    for t in (ckpt.STATE, ckpt.LINEAGE, ckpt.METRICS):
-        if cat.maybe_compact(t):
-            cat.vacuum(t, keep_versions=4)
-    caching.release_caches()
-    wall = time.time() - t0
-    n_triples = cat.read("triples_raw").count()
-    return {
-        "wall_s": wall,
-        "n_triples": n_triples,
-        "triples_per_sec": n_triples / wall,
-        "n_kg_nodes": cat.read("kg_nodes").count(),
-        "n_kg_edges": cat.read("kg_edges").count(),
-    }
-
-
-def run_pipeline_ard(
-    spark: SparkSession, path: str, warehouse: str, **kwargs,
-) -> dict:
-    """ARD article corpus end-to-end (the reference's D2 document
-    model, data/raw/ard_examples/*.jsonl): JSONL/gzip articles →
-    ``ard_as_documents`` (doc id = url, text = title+abstract+text,
-    title/authors provenance) → stages B-D.  Resume semantics are the
-    pre-assembled path's (re-running skips already-ingested ids)."""
-    from ..sources.ard import ard_as_documents, read_ard
-
-    cfg = PipelineConfig(warehouse=warehouse, **kwargs)
-    cat = make_catalog(spark, warehouse, backend=cfg.catalog_backend)
-    t0 = time.time()
-    docs = ard_as_documents(read_ard(spark, path)).filter(
-        F.col("conv_id").isNotNull()  # no url AND no title: unkeyable
-    )
-    stage_a_ingest_documents(cat, docs, cfg)
-    return _run_bcd_and_stats(cat, cfg, t0)
-
-
-def _finish_stream_and_stats(cat: Catalog, cfg: PipelineConfig, t0: float,
-                             state: dict) -> dict:
-    """Shared tail of every streaming runner: C/D catch-up when the
-    final micro-batches missed the in-stream trigger boundary, cache
-    release, run stats."""
-    if not state.get("cd_on_last"):
-        stage_c_canonicalize(cat, cfg)
-        stage_d_materialize(cat, cfg)
-    if cfg.analytics:
-        stage_e_analytics(cat, cfg)
-    caching.release_caches()
-    wall = time.time() - t0
-    n_triples = cat.read("triples_raw").count()
-    return {
-        "wall_s": wall,
-        "n_triples": n_triples,
-        "triples_per_sec": n_triples / wall,
-        "n_kg_nodes": cat.read("kg_nodes").count(),
-        "n_kg_edges": cat.read("kg_edges").count(),
-    }
-
-
-def run_pipeline_streaming(
-    spark: SparkSession, source_path: str, warehouse: str,
-    cd_every: int | None = None, **kwargs
-) -> dict:
-    """Streaming ingest variant: stages A+B drain from ``source_path``
-    as an exactly-once AvailableNow stream (one atomic commit per
-    micro-batch — streaming/catalog_sink.stream_pipeline_to_catalog).
-
-    ``cd_every=None`` (default): stages C/D run once as the batch
-    catch-up after the stream drains. ``cd_every=k``: the delta-aware
-    C+D trigger runs INSIDE the stream loop after every k-th
-    micro-batch, so the kg tables converge while the stream is live;
-    the post-drain pass then only fires if the final batches didn't
-    land on a trigger boundary. Because the stream writes the batch
-    stages' processed sets, this composes with plain ``run_pipeline``
-    in either order on the same warehouse."""
-    import os
-
-    from ..streaming.catalog_sink import stream_pipeline_to_catalog
-
-    cfg = PipelineConfig(warehouse=warehouse, **kwargs)
-    cat = make_catalog(spark, warehouse, backend=cfg.catalog_backend)
-    t0 = time.time()
-    state = stream_pipeline_to_catalog(
-        spark, source_path, cat,
-        checkpoint_path=os.path.join(warehouse, "_stream_ckpt"),
-        extract_engine=cfg.extract_engine, salt_segment=cfg.salt_segment,
-        cd_every=cd_every, cd_cfg=cfg,
-    )
-    return _finish_stream_and_stats(cat, cfg, t0, state)
-
-
-def run_pipeline_pdfs_streaming(
-    spark: SparkSession, pdf_dir: str, warehouse: str, glob: str = "*.pdf",
-    cd_every: int | None = None, **kwargs,
-) -> dict:
-    """Streaming twin of :func:`run_pipeline_pdfs`: PDFs arriving in
-    ``pdf_dir`` drain as an exactly-once AvailableNow binaryFile
-    stream (streaming/catalog_sink.stream_pdf_pipeline_to_catalog),
-    with the same cd_every in-stream C+D convergence contract as the
-    transcript stream."""
-    import os
-
-    from ..streaming.catalog_sink import stream_pdf_pipeline_to_catalog
-
-    cfg = PipelineConfig(warehouse=warehouse, **kwargs)
-    cat = make_catalog(spark, warehouse, backend=cfg.catalog_backend)
-    t0 = time.time()
-    state = stream_pdf_pipeline_to_catalog(
-        spark, pdf_dir, cat,
-        checkpoint_path=os.path.join(warehouse, "_stream_ckpt"),
-        glob=glob, extract_engine=cfg.extract_engine,
-        cd_every=cd_every, cd_cfg=cfg,
-    )
-    return _finish_stream_and_stats(cat, cfg, t0, state)
-
-
-def run_pipeline_ard_streaming(
-    spark: SparkSession, path: str, warehouse: str,
-    cd_every: int | None = None, **kwargs,
-) -> dict:
-    """Streaming twin of :func:`run_pipeline_ard`: JSONL article files
-    arriving in ``path`` drain as an exactly-once AvailableNow stream
-    with the cd_every in-stream C+D convergence contract."""
-    import os
-
-    from ..streaming.catalog_sink import stream_ard_pipeline_to_catalog
-
-    cfg = PipelineConfig(warehouse=warehouse, **kwargs)
-    cat = make_catalog(spark, warehouse, backend=cfg.catalog_backend)
-    t0 = time.time()
-    state = stream_ard_pipeline_to_catalog(
-        spark, path, cat,
-        checkpoint_path=os.path.join(warehouse, "_stream_ckpt"),
-        extract_engine=cfg.extract_engine,
-        cd_every=cd_every, cd_cfg=cfg,
-    )
-    return _finish_stream_and_stats(cat, cfg, t0, state)
-
-
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--transcripts", help="parquet path of transcripts")
     ap.add_argument("--pdf-dir", help="directory of PDF documents "
@@ -855,14 +806,16 @@ def main() -> None:
                          "micro-batches, so kg tables converge live")
     ap.add_argument("--modified-after", default=None,
                     metavar="YYYY-MM-DDTHH:mm:ss",
-                    help="only ingest files modified after this local "
-                         "timestamp (listing-level high-water mark for "
-                         "resume at corpus sizes where the processed-id "
-                         "broadcast would not fit)")
+                    help="with --pdf-dir (batch): only ingest files "
+                         "modified after this local timestamp "
+                         "(listing-level high-water mark for resume at "
+                         "corpus sizes where the processed-id broadcast "
+                         "would not fit)")
     ap.add_argument("--extract-images", action="store_true",
-                    help="with --pdf-dir: also land every embedded "
-                         "/XObject image in the `images` warehouse "
-                         "table (typed metadata + binary payload)")
+                    help="with --pdf-dir (batch): also land every "
+                         "embedded /XObject image in the `images` "
+                         "warehouse table (typed metadata + binary "
+                         "payload)")
     ap.add_argument("--analytics", action="store_true",
                     help="after materialization, score every kg_node "
                          "with PageRank centrality / triangles / "
@@ -876,59 +829,32 @@ def main() -> None:
                     help="after the run, write the graph as an "
                          "idempotent Cypher MERGE script (nodes/ then "
                          "edges/ text parts) for FalkorDB/Neo4j loading")
-    args = ap.parse_args()
-    if not args.transcripts and not args.pdf_dir and not args.ard:
-        ap.error("one of --transcripts, --pdf-dir or --ard is required")
+    args = ap.parse_args(argv)
+    sources = {"transcripts": args.transcripts, "pdf": args.pdf_dir,
+               "ard": args.ard}
+    given = [f for f, path in sources.items() if path]
+    if len(given) != 1:
+        ap.error("exactly one of --transcripts, --pdf-dir or --ard is required")
+    fmt = given[0]
+    why = inapplicable_option(
+        fmt, args.stream, cd_every=args.cd_every,
+        extract_images=args.extract_images,
+        modified_after=args.modified_after,
+    )
+    if why:
+        ap.error(why)
     spark = get_spark("kg-pipeline", cpus=args.cpus)
-    if args.ard and args.stream:
-        stats = run_pipeline_ard_streaming(
-            spark, args.ard, args.warehouse,
-            cd_every=args.cd_every, extract_engine=args.engine,
-            analytics=args.analytics,
-            analytics_weighted=args.analytics_weighted,
-        )
-    elif args.ard:
-        stats = run_pipeline_ard(
-            spark, args.ard, args.warehouse, extract_engine=args.engine,
-            analytics=args.analytics,
-            analytics_weighted=args.analytics_weighted,
-        )
-    elif args.pdf_dir and args.stream:
-        stats = run_pipeline_pdfs_streaming(
-            spark, args.pdf_dir, args.warehouse,
-            cd_every=args.cd_every, extract_engine=args.engine,
-            analytics=args.analytics,
-            analytics_weighted=args.analytics_weighted,
-        )
-    elif args.pdf_dir:
-        stats = run_pipeline_pdfs(
-            spark, args.pdf_dir, args.warehouse, extract_engine=args.engine,
-            extract_images=args.extract_images,
-            modified_after=args.modified_after,
-            analytics=args.analytics,
-            analytics_weighted=args.analytics_weighted,
-        )
-    elif args.stream:
-        stats = run_pipeline_streaming(
-            spark, args.transcripts, args.warehouse,
-            cd_every=args.cd_every, extract_engine=args.engine,
-            analytics=args.analytics,
-            analytics_weighted=args.analytics_weighted,
-        )
-    else:
-        from ..sources.transcripts import read_transcripts
-
-        transcripts = read_transcripts(spark, args.transcripts)
-        stats = run_pipeline(
-            spark, transcripts, args.warehouse, extract_engine=args.engine,
-            analytics=args.analytics,
-            analytics_weighted=args.analytics_weighted,
-        )
+    stats = run_pipeline(
+        spark, sources[fmt], args.warehouse, fmt=fmt, stream=args.stream,
+        cd_every=args.cd_every, extract_images=args.extract_images,
+        modified_after=args.modified_after, extract_engine=args.engine,
+        analytics=args.analytics, analytics_weighted=args.analytics_weighted,
+    )
     if args.export_cypher:
         from ..operators.export import export_cypher
 
-        cat = make_catalog(spark, args.warehouse)
-        stats.update(export_cypher(cat, args.export_cypher))
+        stats.update(export_cypher(Catalog(spark, args.warehouse),
+                                   args.export_cypher))
     print(stats)
 
 

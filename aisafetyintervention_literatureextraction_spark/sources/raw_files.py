@@ -16,8 +16,8 @@ side set (reference extract.py:62-71: ``glob("*.pdf")`` +
 
 Columns out: ``doc_id`` (filename stem — C2, reference extract.py:79
 ``pdf_path.stem``), ``path``, ``n_bytes``, ``mod_time``, ``content``
-(binary). ``content`` feeds the multimodal operators
-(operators/multimodal.py decode/feature UDFs) and text extraction.
+(binary). ``content`` feeds PDF text and image extraction
+(operators/pdf.py).
 """
 
 from __future__ import annotations

@@ -282,7 +282,7 @@ def _process_pdf_batch(
     """One micro-batch of streaming PDF ingest: binaryFile rows →
     stdlib text extraction (operators/pdf.py) → pre-assembled
     documents/quarantine deltas → the shared A+B commit body.  The
-    streaming twin of ``run_pipeline_pdfs``'s stage-A half
+    streaming twin of the batch PDF adapter's stage-A half
     (plans/pipeline.py stage_a_ingest_documents): same undecodable-
     document quarantine reason, same /Info provenance columns, same
     atomic run_id commit."""

@@ -391,3 +391,66 @@ def test_sql_surface_contract_parity(spark, corpus, warehouse):
     ).distinct()
     df_iso = nodes.join(endpoints, "node_id", "left_anti").select("node_id")
     assert rows(sql_iso) == rows(df_iso)
+
+
+def _kv_rows(cat, version=None):
+    return sorted((r["k"], r["v"]) for r in cat.read("t", version=version).collect())
+
+
+def test_append_merge_timetravel_contract(spark, catalog):
+    """The core catalog contract: sequential versions, O(delta) append
+    semantics, LWW merge, merge-after-append key collapse, and version
+    time travel."""
+    cat = catalog
+    mk = lambda rows: spark.createDataFrame(rows, "k int, v int")
+
+    cat.merge_upsert(mk([(0, 10), (1, 1)]), "t", keys=["k"], order_col="v")
+    assert cat.current_version("t") == 0
+    assert _kv_rows(cat) == [(0, 10), (1, 1)]
+
+    cat.append(mk([(1, 7), (2, 2)]), "t")
+    v1 = cat.current_version("t")
+    assert v1 == 1
+
+    cat.merge_upsert(mk([(3, 3)]), "t", keys=["k"], order_col="v")
+    # appended raw rows collapse on the next merge: 1→7 beats 1
+    assert _kv_rows(cat) == [(0, 10), (1, 7), (2, 2), (3, 3)]
+
+    # time travel to the post-append version still shows the raw log
+    assert _kv_rows(cat, version=v1) == [(0, 10), (1, 1), (1, 7), (2, 2)]
+
+    # merge_upsert of EXISTING keys: the update must fold with the base
+    # row under LWW — update rows beat base even when the base order_col
+    # is higher (__gen), and among duplicate update rows the max
+    # order_col wins
+    cat.merge_upsert(mk([(0, 4), (0, 6), (4, 44)]), "t", keys=["k"], order_col="v")
+    assert _kv_rows(cat) == [(0, 6), (1, 7), (2, 2), (3, 3), (4, 44)]
+
+
+def test_rollback_skips_unlabeled_between_orphans(spark, catalog):
+    """A torn run's unlabeled (no-run_id) commits sandwiched between
+    its labeled orphan commits roll back WITH the run; an unlabeled
+    suffix over a committed tail is kept."""
+    cat = catalog
+    mk = lambda rows: spark.createDataFrame(rows, "k int, v int")
+    cat.overwrite(mk([(0, 0)]), "t", run_id="good")
+    cat.overwrite(mk([(1, 1)]), "t", run_id="orphan")
+    cat.overwrite(mk([(2, 2)]), "t")  # same torn run, unlabeled
+    cat.overwrite(mk([(3, 3)]), "t", run_id="orphan")
+    rolled = cat.rollback_orphan_versions("t", committed_run_ids={"good"})
+    assert rolled == 3
+    assert _kv_rows(cat) == [(0, 0)]
+    # unlabeled suffix with no orphan beneath: kept
+    cat.overwrite(mk([(5, 5)]), "t")
+    assert cat.rollback_orphan_versions("t", committed_run_ids={"good"}) == 0
+    assert _kv_rows(cat) == [(5, 5)]
+
+
+def test_rollback_orphans(spark, catalog):
+    cat = catalog
+    mk = lambda rows: spark.createDataFrame(rows, "k int, v int")
+    cat.overwrite(mk([(0, 0)]), "t", run_id="good")
+    cat.overwrite(mk([(9, 9)]), "t", run_id="orphan")
+    rolled = cat.rollback_orphan_versions("t", committed_run_ids={"good"})
+    assert rolled == 1
+    assert _kv_rows(cat) == [(0, 0)]

@@ -340,12 +340,14 @@ def test_stage_e_kg_node_metrics(spark, corpus, warehouse):
         r["metric"]: int(r["value"])
         for r in cat.read("_ckpt_metrics").filter(
             "metric IN ('n_kg_nodes', 'n_kg_edges', 'n_candidate_pairs',"
-            " 'n_nodes_scored', 'n_edges_scored')").collect()
+            " 'n_signatures_computed', 'n_nodes_scored', 'n_edges_scored')"
+        ).collect()
     }
     assert recorded == {
         "n_kg_nodes": cat.read("kg_nodes").count(),
         "n_kg_edges": cat.read("kg_edges").count(),
         "n_candidate_pairs": cat.read("node_pairs").count(),
+        "n_signatures_computed": cat.read("candidate_nodes").count(),
         "n_nodes_scored": cat.read("kg_node_metrics").count(),
         "n_edges_scored": cat.read("kg_edge_metrics").count(),
     }

@@ -5,6 +5,7 @@ survives damaged files, and feeds the extraction operators end-to-end
 import re
 
 import pytest
+from digest import table_digest
 
 from aisafetyintervention_literatureextraction_spark.operators.pdf import (
     PdfDocument,
@@ -132,6 +133,24 @@ def test_pdf_dir_to_mentions_end_to_end(spark, tmp_path):
         assert text[r.span_start:r.span_end] == r.mention
 
 
+# table_digest of the PDF-run warehouses built below: the 16-doc
+# grammar fixture plus a garbage, an RC4 and a locked file; and the
+# two-file image run (one embedded image, one text-only file)
+PDF_DIGESTS = {
+    "documents": "2ed99f5e302773503baa099576213fe164971b2981df054da9716d7796f98d07",
+    "quarantine": "7fc099c74b66711695d642185138161febc1f4e97704d6a8934b323d981e9c3d",
+    "kg_nodes": "26cdf084f036d6746d24379af16cf938c07e0d9bb769aea81f553257fa1d1869",
+    "kg_edges": "786c2125e302b6341722e5059a171c4dce3acd367d8d530f54c2fec1d05bf937",
+}
+IMAGE_RUN_DIGESTS = {
+    "documents": "6cbc7ee959aeed3e2f401fe00d18f0c8497376b944db81136697b9fdb5f73571",
+    "quarantine": "a5a4a34c7fa20556a1d05ef35c6f9a2a9d3149c34fbfe23195c43ec751603432",
+    "kg_nodes": "c69a4d586154846bd32d08772350947c35905a2bcc992b7f7188a873815ff2e3",
+    "kg_edges": "6de28879dbdecd47e3f5369bdb5ebdcbb1cab4ccf76bff0e2396ec720251de94",
+    "images": "b699d083482914db85cfdb4fafe5ae093f13a7ac0202b8788595b1d1752abf64",
+}
+
+
 def test_pdf_dir_full_pipeline(spark, tmp_path):
     """The reference's complete workflow on its own input format: a
     directory of PDFs → stdlib text extraction → stages B-D → KG
@@ -139,7 +158,7 @@ def test_pdf_dir_full_pipeline(spark, tmp_path):
     idempotence on re-run."""
     from aisafetyintervention_literatureextraction_spark.catalog import Catalog
     from aisafetyintervention_literatureextraction_spark.plans.pipeline import (
-        run_pipeline_pdfs,
+        run_pipeline,
     )
 
     from pdfraw import encrypt_pdf_fixture
@@ -153,10 +172,11 @@ def test_pdf_dir_full_pipeline(spark, tmp_path):
     (tmp_path / "pdfs" / "doc_locked.pdf").write_bytes(
         open_enc.replace(b"/U <", b"/U <ff", 1))
     wh = str(tmp_path / "wh")
-    stats = run_pipeline_pdfs(spark, d, wh)
+    stats = run_pipeline(spark, d, wh, fmt="pdf")
     assert stats["n_triples"] == N_DOCS  # one grammar edge per doc
     assert stats["n_kg_edges"] > 0 and stats["n_kg_nodes"] > 0
     cat = Catalog(spark, wh)
+    assert {t: table_digest(cat, t) for t in PDF_DIGESTS} == PDF_DIGESTS
     q = {r.conv_id: r.reason for r in cat.read("quarantine").collect()}
     assert q == {"doc_bad": "undecodable_document",
                  "doc_locked": "encrypted_pdf"}
@@ -185,7 +205,7 @@ def test_pdf_dir_full_pipeline(spark, tmp_path):
                        for c in r.conv_ids})[:20]
         assert list(r.source_titles) == want
     # resume: nothing pending, same warehouse counts
-    stats2 = run_pipeline_pdfs(spark, d, wh)
+    stats2 = run_pipeline(spark, d, wh, fmt="pdf")
     assert stats2["n_triples"] == stats["n_triples"]
     assert stats2["n_kg_edges"] == stats["n_kg_edges"]
 
@@ -208,7 +228,7 @@ def test_pdf_resume_skips_before_decode_and_marks_imageless_files(
     )
     from aisafetyintervention_literatureextraction_spark.pdfgen import build_pdf
     from aisafetyintervention_literatureextraction_spark.plans.pipeline import (
-        run_pipeline_pdfs,
+        run_pipeline,
     )
     from aisafetyintervention_literatureextraction_spark.sources.raw_files import (
         read_raw_files,
@@ -219,16 +239,18 @@ def test_pdf_resume_skips_before_decode_and_marks_imageless_files(
     (d / "with_img.pdf").write_bytes(build_doc(1))  # embeds one image
     (d / "no_img.pdf").write_bytes(build_pdf([["plain text only"]]))
     wh = str(tmp_path / "wh")
-    stats = run_pipeline_pdfs(spark, str(d), wh, extract_images=True)
+    stats = run_pipeline(spark, str(d), wh, fmt="pdf", extract_images=True)
     assert stats["n_images"] == 1
     cat = Catalog(spark, wh)
+    assert {t: table_digest(cat, t) for t in IMAGE_RUN_DIGESTS} == (
+        IMAGE_RUN_DIGESTS)
     done = {r.conv_id for r in cat.read(ckpt.STATE)
             .filter("stage = 'A_images'").collect()}
     assert done == {"with_img", "no_img"}  # attempted, not just emitted
 
     # re-run: both files skip at the file level; the resumed decode
     # plan carries the broadcast anti-join BELOW the MapInPandas
-    stats2 = run_pipeline_pdfs(spark, str(d), wh, extract_images=True)
+    stats2 = run_pipeline(spark, str(d), wh, fmt="pdf", extract_images=True)
     assert stats2["n_images"] == 1
     files = read_raw_files(spark, str(d), glob="*.pdf")
     plan = decode_pdf_text(

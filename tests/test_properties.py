@@ -166,32 +166,6 @@ def test_winnow_shared_substring_guarantee(spark, shared, pads):
     assert out["a"] & out["b"]
 
 
-@settings(max_examples=12, deadline=None)
-@given(
-    h=st.integers(min_value=1, max_value=24),
-    w=st.integers(min_value=1, max_value=24),
-    ncolors=st.integers(min_value=1, max_value=32),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-)
-def test_lossless_codec_roundtrips(h, w, ncolors, seed):
-    """PNG and GIF are lossless: encode→decode is the identity for
-    arbitrary sizes/palettes (1×1 up, odd dims, single-color)."""
-    import numpy as np
-
-    from aisafetyintervention_literatureextraction_spark.operators.multimodal import (
-        decode_gif,
-        decode_png,
-        encode_gif,
-        encode_png,
-    )
-
-    rng = np.random.default_rng(seed)
-    palette = rng.integers(0, 256, size=(ncolors, 3), dtype=np.uint8)
-    img = palette[rng.integers(0, ncolors, size=(h, w))]
-    np.testing.assert_array_equal(decode_png(encode_png(img)), img)
-    np.testing.assert_array_equal(decode_gif(encode_gif([img]))[0], img)
-
-
 # -- r4: PDF round-trip property (no Spark; pure codec) ----------------
 
 # PDF text model: the assembler emits "\n" between lines and cannot

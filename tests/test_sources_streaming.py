@@ -317,20 +317,32 @@ def test_stream_pipeline_ab_multibatch(spark, corpus, tmp_path):
     assert rows(cat_s, "edges_agg") == rows(cat_b, "edges_agg")
 
 
-def test_run_pipeline_streaming_equals_batch(spark, corpus, tmp_path):
+def test_run_pipeline_streaming_equals_batch(spark, corpus, tmp_path,
+                                             monkeypatch):
     """The --stream CLI path (streaming A+B ingest → batch C/D
-    catch-up) lands the same final KG as the all-batch pipeline."""
+    catch-up) lands the same final KG as the all-batch pipeline, and
+    offers the bookkeeping tables for compaction like a batch run (a
+    stream appends a state entry per micro-batch)."""
+    from aisafetyintervention_literatureextraction_spark import checkpoint as ckpt
     from aisafetyintervention_literatureextraction_spark.catalog import Catalog
     from aisafetyintervention_literatureextraction_spark.plans.pipeline import (
         run_pipeline,
-        run_pipeline_streaming,
     )
 
     df, _ = corpus
     src = str(tmp_path / "src")
     df.write.parquet(src)
 
-    s_stats = run_pipeline_streaming(spark, src, str(tmp_path / "wh_s"))
+    offered = []
+    maybe_compact = Catalog.maybe_compact
+
+    def spy(self, name, *args, **kwargs):
+        offered.append(name)
+        return maybe_compact(self, name, *args, **kwargs)
+
+    monkeypatch.setattr(Catalog, "maybe_compact", spy)
+    s_stats = run_pipeline(spark, src, str(tmp_path / "wh_s"), stream=True)
+    assert {ckpt.STATE, ckpt.LINEAGE, ckpt.METRICS} <= set(offered)
     b_stats = run_pipeline(spark, df, str(tmp_path / "wh_b"))
     assert s_stats["n_triples"] == b_stats["n_triples"] > 0
     assert s_stats["n_kg_nodes"] == b_stats["n_kg_nodes"]
@@ -411,7 +423,7 @@ def test_stream_pdf_pipeline_cd_in_stream(spark, tmp_path):
     """Streaming PDF ingest (r4 VERDICT next-step #6): PDFs arriving
     across micro-batches (maxFilesPerTrigger=4) through the binaryFile
     stream + in-stream C+D produce kg tables byte-equal to the batch
-    ``run_pipeline_pdfs`` on the same corpus, /Info provenance
+    ``run_pipeline(fmt="pdf")`` on the same corpus, /Info provenance
     included; a full offset replay changes nothing, and an undecodable
     file quarantines inside its batch."""
     from aisafetyintervention_literatureextraction_spark.catalog import Catalog
@@ -420,7 +432,7 @@ def test_stream_pdf_pipeline_cd_in_stream(spark, tmp_path):
     )
     from aisafetyintervention_literatureextraction_spark.plans.pipeline import (
         PipelineConfig,
-        run_pipeline_pdfs,
+        run_pipeline,
     )
     from aisafetyintervention_literatureextraction_spark.streaming.catalog_sink import (
         stream_pdf_pipeline_to_catalog,
@@ -441,7 +453,7 @@ def test_stream_pdf_pipeline_cd_in_stream(spark, tmp_path):
     q = {r.conv_id: r.reason for r in cat_s.read("quarantine").collect()}
     assert q == {"doc_bad": "undecodable_document"}
 
-    stats_b = run_pipeline_pdfs(spark, d, str(tmp_path / "wh_b"))
+    stats_b = run_pipeline(spark, d, str(tmp_path / "wh_b"), fmt="pdf")
     cat_b = Catalog(spark, str(tmp_path / "wh_b"))
     assert stats_b["n_triples"] == cat_s.read("triples_raw").count()
 
@@ -469,14 +481,27 @@ def test_stream_pdf_pipeline_cd_in_stream(spark, tmp_path):
     assert rows(cat_s, "kg_edges") == rows(cat_b, "kg_edges")
 
 
+# table_digest of the batch ARD warehouse built below (12 grammar
+# articles, one unkeyable row, one all-empty article)
+ARD_DIGESTS = {
+    "documents": "64fcbcecde6f15650ca3c049fed602f423b1cf8060fad291455a0ee0108eb4a5",
+    "quarantine": "919e16dfaabb6ab7bc3dcbcb9cbeeac3895b8f9ca7e0aca2423bb05ca2d3511f",
+    "kg_nodes": "fe4232ba92279ddd186d941c55377dd592a8d65670b9643ac34e9c5cf2439d71",
+    "kg_edges": "2c6949640e3668908a4882be1e964cdc32e4ce0c0fd9b7402f75b03cbedfcddb",
+}
+
+
 def test_ard_pipeline_batch_and_stream(spark, tmp_path):
     """ARD as a first-class pipeline input (r5): a JSONL article
-    corpus runs batch (`run_pipeline_ard`) and streaming
+    corpus runs batch (`run_pipeline(fmt="ard")`) and streaming
     (`--ard --stream` path) to byte-equal warehouses — provenance
     included — with an all-empty article quarantining and an offset
-    replay changing nothing."""
+    replay changing nothing.  The batch warehouse matches its golden
+    digest."""
     import gzip
     import json as _json
+
+    from digest import table_digest
 
     from aisafetyintervention_literatureextraction_spark.catalog import Catalog
     from aisafetyintervention_literatureextraction_spark.pdfgen import (
@@ -484,7 +509,7 @@ def test_ard_pipeline_batch_and_stream(spark, tmp_path):
     )
     from aisafetyintervention_literatureextraction_spark.plans.pipeline import (
         PipelineConfig,
-        run_pipeline_ard,
+        run_pipeline,
     )
     from aisafetyintervention_literatureextraction_spark.streaming.catalog_sink import (
         stream_ard_pipeline_to_catalog,
@@ -522,9 +547,10 @@ def test_ard_pipeline_batch_and_stream(spark, tmp_path):
                        "abstract": "", "url": "https://ard.example/empty"})
         + "\n")
 
-    stats_b = run_pipeline_ard(spark, str(src), str(tmp_path / "wh_b"))
+    stats_b = run_pipeline(spark, str(src), str(tmp_path / "wh_b"), fmt="ard")
     assert stats_b["n_triples"] == n_docs  # one grammar edge per doc
     cat_b = Catalog(spark, str(tmp_path / "wh_b"))
+    assert {t: table_digest(cat_b, t) for t in ARD_DIGESTS} == ARD_DIGESTS
     q = {r.conv_id: r.reason for r in cat_b.read("quarantine").collect()}
     assert q == {"https://ard.example/empty": "undecodable_document"}
     docs = {r.conv_id: (r.title, r.author)
