@@ -93,12 +93,17 @@ def committed_run_ids(catalog: Catalog) -> set[str]:
     return {r[0] for r in catalog.read(STATE).select("run_id").distinct().collect()}
 
 
-def reconcile_versions(catalog: Catalog, output_tables: list[str]) -> dict[str, int]:
+def reconcile_versions(
+    catalog: Catalog, output_tables: list[str], committed: set[str] | None = None
+) -> dict[str, int]:
     """Overwrite/merge-table twin of ``reconcile``: roll whole table
     VERSIONS back past uncommitted runs (stage C's read-merge-overwrite
     cycle must undo atomically, or a resumed run would merge its delta
-    into a state that already contains it — double-counting)."""
-    committed = committed_run_ids(catalog)
+    into a state that already contains it — double-counting).
+    ``committed`` is a ``committed_run_ids`` set the caller already
+    read (neither reconcile writes the state table); else it is read."""
+    if committed is None:
+        committed = committed_run_ids(catalog)
     return {
         t: catalog.rollback_orphan_versions(t, committed)
         for t in output_tables
@@ -106,12 +111,16 @@ def reconcile_versions(catalog: Catalog, output_tables: list[str]) -> dict[str, 
     }
 
 
-def reconcile(catalog: Catalog, output_tables: list[str]) -> dict[str, int]:
+def reconcile(
+    catalog: Catalog, output_tables: list[str], committed: set[str] | None = None
+) -> dict[str, int]:
     """Heal a crash between an output-table commit and its stage-state
     commit: drop orphaned manifest entries (runs that never reached
     mark_processed), so resume reprocesses their conv_ids exactly once
-    instead of duplicating rows. O(manifests), zero data IO."""
-    committed = committed_run_ids(catalog)
+    instead of duplicating rows. O(manifests), zero data IO.
+    ``committed`` as in ``reconcile_versions``."""
+    if committed is None:
+        committed = committed_run_ids(catalog)
     return {
         t: catalog.prune_orphan_runs(t, committed)
         for t in output_tables

@@ -83,31 +83,22 @@ from contextlib import contextmanager
 
 @contextmanager
 def _adaptive_coalesce(df: DataFrame):
-    """Re-enable AQE partition coalescing for a kernel's eager loop
-    jobs (r6).  The driver-bench session pins coalescing OFF because
-    the fused reassembly→extraction stage must not shrink below the
-    core count; the graph kernels have the opposite profile — dozens
-    of tiny per-round shuffles whose 64 fixed post-shuffle partitions
-    cost more task-launch overhead than compute.  Coalescing adapts
-    the partition count to the ACTUAL shuffle bytes (advisory size),
-    so this is scale-adaptive, not a local-core-count constant: at
-    24M edges the round relations exceed the advisory size and keep
-    their parallelism (the --graph-scale bench always ran with
-    coalescing on — this aligns the kernels' behavior across
-    sessions).  Scoped to kernels whose per-round stages are LINEAR
+    """Enable AQE partition coalescing for a kernel's eager loop jobs
+    (r6).  ``get_spark`` sessions already coalesce; the ``bench.py``
+    and ``bench_extra.py`` legs pin it OFF because their fused
+    reassembly→extraction stage must not shrink below the core count.
+    The graph kernels have the opposite profile — dozens of tiny
+    per-round shuffles whose fixed post-shuffle partitions cost more
+    task-launch overhead than compute.  Coalescing adapts the
+    partition count to the ACTUAL shuffle bytes (advisory size), so
+    this is scale-adaptive, not a local-core-count constant: at 24M
+    edges the round relations exceed the advisory size and keep their
+    parallelism.  Scoped to kernels whose per-round stages are LINEAR
     joins/aggregations; the wedge-join enumerations (triangle_counts,
-    link_prediction, ktruss) stay out — their fan-out is
-    generated DURING the stage, so byte-based coalescing could starve
-    them of cores.  The session conf is restored on exit; the
-    caller's returned lazy plan executes under the caller's own
-    setting."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_KERNEL_COALESCE", "on") == "off":
-        # deployment escape hatch (and A/B knob): leave the session's
-        # coalescing setting untouched
-        yield
-        return
+    link_prediction, ktruss) stay out — their fan-out is generated
+    DURING the stage, so byte-based coalescing could starve them of
+    cores.  The session conf is restored on exit; the caller's
+    returned lazy plan executes under the caller's own setting."""
     spark = df.sparkSession
     key = "spark.sql.adaptive.coalescePartitions.enabled"
     try:

@@ -184,11 +184,12 @@ def stage_b_extract(cat: Catalog, cfg: PipelineConfig) -> tuple[DataFrame, DataF
     run_id = ckpt.new_run_id()
     t0 = time.time()
     if cfg.resume:
+        committed = ckpt.committed_run_ids(cat)  # one state read, both heals
         ckpt.reconcile(cat, [
             "triples_raw", "nodes_raw", "raw_inputs",
             "quarantine_triples", "quarantine_nodes",
-        ])
-        ckpt.reconcile_versions(cat, ["edges_agg"])  # merge table → rollback
+        ], committed)
+        ckpt.reconcile_versions(cat, ["edges_agg"], committed)  # merge table → rollback
     docs = cat.read("documents")
     pending_docs = ckpt.pending(cat, "B_extract", docs) if cfg.resume else docs
     pending_docs = caching.track(pending_docs)
@@ -317,11 +318,14 @@ def stage_c_canonicalize(cat: Catalog, cfg: PipelineConfig) -> DataFrame:
                 )
                 .drop("o_aliases")
             )
-            n_signed = to_sign.count()
+            # counted below node_bucket_rows' empty-token filter: every
+            # re-signed node, filled by the merge's first scan
+            observed, n_to_sign = _counted(to_sign)
             cat.merge_upsert(
-                node_bucket_rows(to_sign), "node_buckets",
+                node_bucket_rows(observed), "node_buckets",
                 keys=["node_id", "band"], run_id=run_id,
             )
+            n_signed = n_to_sign.get["n"]
             all_buckets = cat.read("node_buckets")
             left = all_buckets.join(to_sign.select("node_id"), "node_id", "left_semi")
             cand = bucket_join_pairs(left, all_buckets)

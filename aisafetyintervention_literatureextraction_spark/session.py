@@ -8,6 +8,21 @@ Defaults chosen for the 100 TB design point, testable on local[N]:
 - UTC session timezone (parity with DuckDB oracle comparisons).
 - shuffle partitions ~ cores locally; on a real cluster this is
   overridden by ``spark.sql.adaptive.coalescePartitions`` anyway.
+- One shuffle writer for every exchange
+  (``spark.shuffle.sort.bypassMergeThreshold=0``).  Below the default
+  threshold of 200 reducers Spark's bypass-merge writer opens one temp
+  file per reducer in every map task, copies them into the map output
+  and deletes them: M x R throw-away files per exchange.  The
+  serialized sort writer writes one spill that is renamed into the
+  data file, plus the index and checksum files, at any reducer count.
+- Tungsten pages of 1 MB on ``local[N]`` (``spark.buffer.pageSize``).
+  Spark's own sizing, nextPow2(heap share / cores / 16), gives 64 MB
+  pages at an 8 GB heap on 4 cores; G1 treats every allocation of
+  half a region (4 MB regions at that heap) or more as a humongous
+  object, so each sort-shuffle map task would allocate one.  1 MB
+  stays below that threshold, and the 8,192-entry page table still
+  addresses 8 GB per task.  Under spark-submit the cluster's heap and
+  Spark's own sizing apply.
 """
 
 from __future__ import annotations
@@ -41,10 +56,14 @@ def get_spark(
     # PythonRunner sets when IT launches the driver python process.
     submitted = "PYSPARK_GATEWAY_PORT" in os.environ or "SPARK_CONNECT_MODE_ENABLED" in os.environ
     if not submitted:
-        builder = builder.master(f"local[{cpus}]")
+        builder = (
+            builder.master(f"local[{cpus}]")
+            .config("spark.buffer.pageSize", "1m")
+        )
     builder = (
         builder
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.shuffle.sort.bypassMergeThreshold", "0")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -123,7 +123,7 @@ def _process_ab_batch(
     # heal a torn prior attempt of this batch before re-appending
     for t in _AB_APPEND_TABLES:
         catalog.prune_orphan_runs(t, committed)
-    ckpt.reconcile_versions(catalog, ["edges_agg"])
+    ckpt.reconcile_versions(catalog, ["edges_agg"], committed)
 
     res = reassemble(batch_df, salt_segment=salt_segment)
     return _commit_ab_docs(
@@ -324,7 +324,7 @@ def _process_preassembled_batch(
         return "skipped"
     for t in _AB_APPEND_TABLES:
         catalog.prune_orphan_runs(t, committed)
-    ckpt.reconcile_versions(catalog, ["edges_agg"])
+    ckpt.reconcile_versions(catalog, ["edges_agg"], committed)
 
     norm = normalize_preassembled(docs)
     usable = F.col("doc_text").isNotNull() & (F.length("doc_text") > 0)

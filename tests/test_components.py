@@ -122,6 +122,16 @@ def test_giant_component_skew_mitigation_locked(spark):
     assert len(sizes) == 1 + half // 2
 
 
+def test_shuffle_writer_defaults_locked(spark):
+    """Every exchange takes the serialized sort-shuffle writer (no
+    per-reducer bypass-merge temp files), and the page size the memory
+    manager actually uses stays below G1's humongous-object threshold
+    (half of a 4 MB region at the default 8 GB heap)."""
+    assert spark.conf.get("spark.shuffle.sort.bypassMergeThreshold") == "0"
+    mm = spark.sparkContext._jsc.sc().env().memoryManager()
+    assert mm.pageSizeBytes() <= 1024 * 1024
+
+
 def test_iteration_stats_do_not_explode(spark):
     """Catalyst sizeInBytes must stay HONEST through the iteration:
     localCheckpoint preserves origin-plan statistics, and join

@@ -41,6 +41,13 @@ def _sig_metric(cat):
     return [int(r["value"]) for r in met.collect()]
 
 
+def _aliases(cat):
+    return {
+        r["node_id"]: list(r["aliases"] or [])
+        for r in cat.read("candidate_nodes").select("node_id", "aliases").collect()
+    }
+
+
 def test_incremental_equals_full(spark, corpus, warehouse, tmp_path):
     df, _ = corpus
     cfg_half = PipelineConfig(warehouse=warehouse)
@@ -51,6 +58,7 @@ def test_incremental_equals_full(spark, corpus, warehouse, tmp_path):
     # (incremental path)
     cat = _run_abc(spark, warehouse, df.filter(F.col("conv_id").isin(half)), cfg_half)
     n_nodes_half = cat.read("candidate_nodes").count()
+    aliases_half = _aliases(cat)
     stage_a_reassemble(cat, df, cfg_half)
     stage_b_extract(cat, cfg_half)
     stage_c_canonicalize(cat, cfg_half)
@@ -67,6 +75,12 @@ def test_incremental_equals_full(spark, corpus, warehouse, tmp_path):
     assert sigs[0] == n_nodes_half
     n_total = cat.read("candidate_nodes").count()
     assert 0 < sigs[1] <= n_total - n_nodes_half + 5  # new (+ rare alias-changed)
+    # exactly the nodes that are new or whose aliases changed
+    resigned = [
+        n for n, al in _aliases(cat).items()
+        if n not in aliases_half or aliases_half[n] != al
+    ]
+    assert sigs[1] == len(resigned)
 
     # third run with nothing pending: zero signatures, state unchanged
     before = _canon_state(cat)
