@@ -64,10 +64,20 @@ class PipelineConfig:
 
 def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
     """``df`` with a row-count ``Observation`` that fills when ``df`` is
-    written: stage metrics ride on the writes (``obs.get["n"]``) instead
-    of re-read ``.count()`` jobs (the ``export_cypher`` pattern)."""
+    written: stage metrics ride on the writes (``_n(obs)``) instead of
+    re-read ``.count()`` jobs (the ``export_cypher`` pattern)."""
     obs = Observation()
     return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
+
+
+def _n(obs: Observation) -> int:
+    """The row count a ``_counted`` Observation recorded. When the
+    action ran but the observed node did not (AQE replaces a plan over
+    an empty cached relation with an empty relation), Spark fills the
+    Observation with an empty row, on which PySpark's ``obs.get``
+    fails: the node saw no rows."""
+    row = obs._jo.getRow()
+    return row.getLong(0) if row.length() else 0
 
 
 def stage_a_reassemble(cat: Catalog, transcripts: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -96,7 +106,7 @@ def stage_a_reassemble(cat: Catalog, transcripts: DataFrame, cfg: PipelineConfig
     ckpt.mark_processed(cat, "A_reassemble", run_id, processed)  # commit point
     ckpt.write_lineage(cat, "A_reassemble", run_id, docs)
     ckpt.write_metrics(cat, "A_reassemble", run_id, {
-        "n_documents_delta": n_docs.get["n"], "wall_s": time.time() - t0,
+        "n_documents_delta": _n(n_docs), "wall_s": time.time() - t0,
     })
     docs.unpersist()
     quarantine.unpersist()
@@ -173,7 +183,7 @@ def stage_a_ingest_documents(
     ckpt.mark_processed(cat, "A_reassemble", run_id, processed)  # commit point
     ckpt.write_lineage(cat, "A_reassemble", run_id, good)
     ckpt.write_metrics(cat, "A_reassemble", run_id, {
-        "n_documents_delta": n_good.get["n"], "wall_s": time.time() - t0,
+        "n_documents_delta": _n(n_good), "wall_s": time.time() - t0,
     })
     good.unpersist()
     bad.unpersist()
@@ -228,7 +238,7 @@ def stage_b_extract(cat: Catalog, cfg: PipelineConfig) -> tuple[DataFrame, DataF
     # per-partition conv_id ranges of the run's output are the useful
     # lineage rows anyway — the full table's ranges are their union)
     ckpt.write_lineage(cat, "B_extract", run_id, t_ok)
-    n_delta = n_t_ok.get["n"]
+    n_delta = _n(n_t_ok)
     ckpt.write_metrics(cat, "B_extract", run_id, {
         "n_triples_delta": n_delta, "wall_s": time.time() - t0,
         "triples_per_sec": n_delta / max(time.time() - t0, 1e-9),
@@ -292,7 +302,7 @@ def stage_c_canonicalize(cat: Catalog, cfg: PipelineConfig) -> DataFrame:
         # every candidate node is signed on the full path
         observed, n_nodes = _counted(nodes)
         cat.overwrite(observed, "candidate_nodes", run_id=run_id)
-        n_signed = n_nodes.get["n"]
+        n_signed = _n(n_nodes)
         nodes.unpersist()
     else:
         delta_raw = caching.track(ckpt.pending(cat, "C_canonicalize", nodes_raw))
@@ -319,13 +329,14 @@ def stage_c_canonicalize(cat: Catalog, cfg: PipelineConfig) -> DataFrame:
                 .drop("o_aliases")
             )
             # counted below node_bucket_rows' empty-token filter: every
-            # re-signed node, filled by the merge's first scan
+            # re-signed node, filled by the merge's first scan (0 when
+            # the delta only repeats known nodes: nothing to re-sign)
             observed, n_to_sign = _counted(to_sign)
             cat.merge_upsert(
                 node_bucket_rows(observed), "node_buckets",
                 keys=["node_id", "band"], run_id=run_id,
             )
-            n_signed = n_to_sign.get["n"]
+            n_signed = _n(n_to_sign)
             all_buckets = cat.read("node_buckets")
             left = all_buckets.join(to_sign.select("node_id"), "node_id", "left_semi")
             cand = bucket_join_pairs(left, all_buckets)
@@ -365,7 +376,7 @@ def stage_c_canonicalize(cat: Catalog, cfg: PipelineConfig) -> DataFrame:
         )
     ckpt.write_metrics(cat, "C_canonicalize", run_id, {
         "n_candidate_pairs": (
-            cat.read("node_pairs").count() if n_pairs is None else n_pairs.get["n"]
+            cat.read("node_pairs").count() if n_pairs is None else _n(n_pairs)
         ),
         "n_signatures_computed": n_signed,
         "wall_s": time.time() - t0,
@@ -406,7 +417,7 @@ def stage_c_compact(cat: Catalog, cfg: PipelineConfig) -> None:
         cat.spark.createDataFrame([("__all__",)], "conv_id string"),
     )
     ckpt.write_metrics(cat, "C_compact", run_id, {
-        "n_candidate_pairs": n_pairs.get["n"],
+        "n_candidate_pairs": _n(n_pairs),
         "wall_s": time.time() - t0,
     })
     caching.release_caches()
@@ -460,8 +471,8 @@ def stage_d_materialize(cat: Catalog, cfg: PipelineConfig):
     )
     ckpt.write_lineage(cat, "D_materialize", run_id, cat.read("kg_edges"), key="pred")
     ckpt.write_metrics(cat, "D_materialize", run_id, {
-        "n_kg_nodes": n_nodes.get["n"],
-        "n_kg_edges": n_edges.get["n"],
+        "n_kg_nodes": _n(n_nodes),
+        "n_kg_edges": _n(n_edges),
         "wall_s": time.time() - t0,
     })
     return g
@@ -579,8 +590,8 @@ def stage_e_analytics(cat: Catalog, cfg: PipelineConfig):
         cat.spark.createDataFrame([("__all__",)], "conv_id string"),
     )
     ckpt.write_metrics(cat, "E_analytics", run_id, {
-        "n_nodes_scored": n_nodes.get["n"],
-        "n_edges_scored": n_edges.get["n"],
+        "n_nodes_scored": _n(n_nodes),
+        "n_edges_scored": _n(n_edges),
         "modularity_q": float(q),
         "wall_s": time.time() - t0,
     })

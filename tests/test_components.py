@@ -8,6 +8,7 @@ import pyspark.sql.functions as F
 from aisafetyintervention_literatureextraction_spark.operators.components import (
     connected_components,
 )
+from aisafetyintervention_literatureextraction_spark.session import page_size
 
 
 def _cc(spark, n_nodes, edge_list):
@@ -125,11 +126,28 @@ def test_giant_component_skew_mitigation_locked(spark):
 def test_shuffle_writer_defaults_locked(spark):
     """Every exchange takes the serialized sort-shuffle writer (no
     per-reducer bypass-merge temp files), and the page size the memory
-    manager actually uses stays below G1's humongous-object threshold
-    (half of a 4 MB region at the default 8 GB heap)."""
+    manager actually uses is at most a quarter of this JVM's G1 region,
+    so a page and its array header stay below G1's humongous-object
+    threshold of half a region."""
     assert spark.conf.get("spark.shuffle.sort.bypassMergeThreshold") == "0"
-    mm = spark.sparkContext._jsc.sc().env().memoryManager()
-    assert mm.pageSizeBytes() <= 1024 * 1024
+    jvm = spark.sparkContext._jvm
+    page = spark.sparkContext._jsc.sc().env().memoryManager().pageSizeBytes()
+    diag = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    assert diag.getVMOption("UseG1GC").getValue() == "true"
+    region = int(diag.getVMOption("G1HeapRegionSize").getValue())
+    assert page <= min(region // 4, 1024 * 1024)
+    assert page == page_size(spark.conf.get("spark.driver.memory"))
+
+
+def test_page_size_follows_g1_regions():
+    """G1 regions are heap / 2048 rounded down to a power of two, 1 MB
+    to 32 MB; pages are a quarter region, at most 1 MB."""
+    kib = 1024
+    assert page_size("1g") == page_size("2g") == 256 * kib
+    assert page_size("4g") == page_size("4096m") == page_size("4096") == 512 * kib
+    assert page_size("8g") == page_size("8G") == page_size("64g") == 1024 * kib
 
 
 def test_iteration_stats_do_not_explode(spark):

@@ -88,6 +88,24 @@ def test_incremental_equals_full(spark, corpus, warehouse, tmp_path):
     assert _sig_metric(cat)[-1] == 0
     assert _canon_state(cat) == before
 
+    # fourth run: a non-empty delta with nothing to re-sign. A copy of
+    # one conversation under a conv_id that sorts before every other
+    # one repeats existing nodes only, and never wins their aliases
+    # (last writer = greatest conv_id), so no alias changes.
+    aliases_before = _aliases(cat)
+    src = cat.read("candidate_nodes").select(F.explode("conv_ids")).first()[0]
+    dup_id = "0" + src
+    assert dup_id < min(convs)
+    dup = df.filter(F.col("conv_id") == src).withColumn("conv_id", F.lit(dup_id))
+    stage_a_reassemble(cat, df.unionByName(dup), cfg_half)
+    stage_b_extract(cat, cfg_half)
+    stage_c_canonicalize(cat, cfg_half)
+    assert _sig_metric(cat)[-1] == 0
+    assert _aliases(cat) == aliases_before
+    assert cat.read("candidate_nodes").filter(
+        F.array_contains("conv_ids", dup_id)
+    ).count() > 0
+
 
 def test_stage_c_crash_rolls_back(spark, corpus, warehouse):
     """An overwrite from a run that never reached mark_processed must
