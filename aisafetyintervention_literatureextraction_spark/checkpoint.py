@@ -101,14 +101,13 @@ def reconcile_versions(
     cycle must undo atomically, or a resumed run would merge its delta
     into a state that already contains it — double-counting).
     ``committed`` is a ``committed_run_ids`` set the caller already
-    read (neither reconcile writes the state table); else it is read."""
-    if committed is None:
+    read (neither reconcile writes the state table); else it is read,
+    and only when one of the tables exists: with none there is nothing
+    to roll back, so a fresh build's heals submit no job."""
+    present = [t for t in output_tables if catalog.exists(t)]
+    if present and committed is None:
         committed = committed_run_ids(catalog)
-    return {
-        t: catalog.rollback_orphan_versions(t, committed)
-        for t in output_tables
-        if catalog.exists(t)
-    }
+    return {t: catalog.rollback_orphan_versions(t, committed) for t in present}
 
 
 def reconcile(
@@ -119,13 +118,10 @@ def reconcile(
     mark_processed), so resume reprocesses their conv_ids exactly once
     instead of duplicating rows. O(manifests), zero data IO.
     ``committed`` as in ``reconcile_versions``."""
-    if committed is None:
+    present = [t for t in output_tables if catalog.exists(t)]
+    if present and committed is None:
         committed = committed_run_ids(catalog)
-    return {
-        t: catalog.prune_orphan_runs(t, committed)
-        for t in output_tables
-        if catalog.exists(t)
-    }
+    return {t: catalog.prune_orphan_runs(t, committed) for t in present}
 
 
 def write_lineage(

@@ -1,4 +1,5 @@
-"""Stage C — entity canonicalization (SURVEY.md §2.3 J1, §2.10 X2).
+"""Stage C — entity canonicalization operators (SURVEY.md §2.3 J1,
+§2.10 X2).
 
 The reference embeds every node text with a remote model and does an
 approximate cosine KNN self-join (usearch HNSW) keeping the top-30
@@ -8,10 +9,10 @@ deterministic, sub-quadratic pipeline per the north rule:
 
 1. **node text** — serialize each candidate node exactly like the
    reference (db.py:81-95 semantics, functions/text.node_text).
-2. **token features** — name + alias + description tokens.
+2. **token features** — name + alias tokens (``_feature_tokens``).
 3. **MinHash-LSH blocking** — banded minhash over the token set;
    candidate pair ⇔ two nodes share ≥1 band bucket. This is a
-   self-join on (band, bucket) — shuffle on the bucket key only,
+   join on (band, bucket) — shuffle on the bucket key only,
    never O(n²).
 4. **one-pass verify** — ``(type, tokens)`` attach to each side of
    the deduplicated candidate pairs once; cross-type pairs drop, then
@@ -20,12 +21,26 @@ deterministic, sub-quadratic pipeline per the north rule:
    explode of each pair's token union joined to the IDF table
    (weight = IDF, so dot = Σ idf² over A∩B) — the C5 analog of the
    reference's ``similarity = 1 - distance`` (merge.py:102).
-5. threshold → similarity edges for connected components (G5).
+5. threshold → similarity edges, unioned with the exact
+   alias-identity edges, for connected components (G5).
+
+A threshold replaces the reference's global top-30 with a scale-free
+criterion (SURVEY.md §2.6 O2), and merging requires BOTH signals: set
+Jaccard (surface overlap) AND TF-IDF cosine (informativeness-weighted
+overlap). On the fixture corpus true alias clusters score 1.0/1.0 and
+the worst spurious candidate 0.6/0.48, so the AND separates them with
+margin on both axes.
+
+This module holds the operators; the stage itself — sign, bucket join,
+verify, components, over no prior state or folded into the persisted
+tables — is the one ``plans.pipeline._canonicalize`` sequence, shared
+by the from-scratch build, the incremental run and compaction.
 
 Skew/scale notes: bucket hot spots (a band value shared by k nodes)
 produce k² pair candidates — capped by ``max_bucket_size`` exactly as
 production LSH dedup pipelines drop degenerate buckets (stop-word-only
-nodes); AQE skew-join handles the rest.
+nodes); AQE skew-join handles the rest. Every step is node-scale, so
+stage C stays O(distinct nodes), not O(turns), as the corpus grows.
 """
 
 from __future__ import annotations
@@ -33,7 +48,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.caching import track
 from ..functions.hashing import lsh_bands, minhash_signature, stable_node_id
 from ..functions.text import node_text, snake_case, tokenize
 from .dedup import _jaccard
@@ -118,9 +132,10 @@ def bucket_join_pairs(
 ) -> DataFrame:
     """Candidate (a_id, b_id) pairs: left rows joined against the full
     bucket table on (band, bucket), canonical a<b ordering, hot buckets
-    dropped (skew control), per-pair dedup (A4). For a full run pass
-    the same DataFrame twice; for an incremental run pass only the
-    new/changed nodes' rows on the left — candidates then cost
+    dropped (skew control), per-pair dedup (A4). Stage C passes the
+    signed nodes' rows on the left and the whole node_buckets table on
+    the right: from scratch those are the same rows (a self-join); an
+    incremental run signs only new/changed nodes, so candidates cost
     O(delta × matched buckets), not O(all nodes)."""
     sizes = all_buckets.groupBy("band", "bucket").agg(F.count("*").alias("bsz"))
     hot = F.broadcast(sizes.filter(F.col("bsz") > max_bucket_size).select("band", "bucket"))
@@ -141,9 +156,8 @@ def bucket_join_pairs(
 def verify_pairs(
     cand: DataFrame,
     nodes: DataFrame,
-    jaccard_threshold: float = 0.6,
-    cosine_threshold: float = 0.7,
-    same_type_only: bool = True,
+    jaccard_threshold: float,
+    cosine_threshold: float,
 ) -> DataFrame:
     """Exact Jaccard + TF-IDF cosine verification of candidate
     (a_id, b_id) pairs → (a_id, b_id, similarity) merge edges, in one
@@ -151,7 +165,7 @@ def verify_pairs(
 
     1. ``(type, tokens)`` attach to each side ONCE, after candidate
        dedup (narrow-join pattern);
-    2. cross-type pairs drop first (``same_type_only``);
+    2. cross-type pairs drop first;
     3. exact Jaccard from set sizes (``dedup._jaccard``) filters BEFORE
        any TF-IDF work — the merge criterion is an AND, so the result
        is the same and cosine runs only on the survivors;
@@ -172,11 +186,11 @@ def verify_pairs(
             F.col("tokens").alias(f"{s}_tokens"),
         )
 
-    pairs = cand.select("a_id", "b_id").join(side("a"), "a_id").join(side("b"), "b_id")
-    if same_type_only:
-        pairs = pairs.filter(F.col("a_type") == F.col("b_type"))
-    pairs = pairs.withColumn("jaccard", _jaccard("a_tokens", "b_tokens")).filter(
-        F.col("jaccard") >= jaccard_threshold
+    pairs = (
+        cand.select("a_id", "b_id").join(side("a"), "a_id").join(side("b"), "b_id")
+        .filter(F.col("a_type") == F.col("b_type"))
+        .withColumn("jaccard", _jaccard("a_tokens", "b_tokens"))
+        .filter(F.col("jaccard") >= jaccard_threshold)
     )
     terms = pairs.select(
         "a_id", "b_id", "jaccard", "a_tokens", "b_tokens",
@@ -282,70 +296,3 @@ def alias_identity_edges(nodes: DataFrame) -> DataFrame:
         )
         .distinct()
     )
-
-
-def similarity_edges(
-    nodes_raw: DataFrame,
-    jaccard_threshold: float = 0.6,
-    cosine_threshold: float = 0.7,
-    same_type_only: bool = True,
-    top_n_pairs: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """nodes_raw → (candidate_nodes_df, merge-edge pairs (a_id, b_id,
-    similarity)). The threshold replaces the reference's magic top-30
-    (merge.py:115) with a scale-free criterion (SURVEY.md §2.6 O2).
-
-    Merge requires BOTH signals: set Jaccard (surface overlap) AND
-    TF-IDF cosine (informativeness-weighted overlap). Measured on the
-    fixture corpus: true alias clusters score 1.0/1.0; the worst
-    spurious candidate scores 0.6/0.48 — the AND separates them with
-    margin on both axes.
-
-    The candidate-node aggregation is persisted here: its consumers
-    (signatures, the verify's token features and IDF document count,
-    the alias-identity keys) would otherwise each recompute the groupBy
-    over the full nodes_raw table. The caller owns unpersisting (it is also the
-    returned DataFrame). Measured at 4.2M turns / 120k distinct
-    nodes (16 cores): whole stage ~21 s (narrow-join LSH + TF-IDF
-    re-rank + CC) — all node-scale, so stage C stays
-    O(distinct nodes), not O(turns), as the corpus grows.
-    """
-    nodes = track(with_node_text(candidate_nodes(nodes_raw)))
-    edges = edges_from_candidates(
-        nodes, jaccard_threshold, cosine_threshold, same_type_only, top_n_pairs
-    )
-    return nodes, edges
-
-
-def edges_from_candidates(
-    nodes: DataFrame,
-    jaccard_threshold: float = 0.6,
-    cosine_threshold: float = 0.7,
-    same_type_only: bool = True,
-    top_n_pairs: int | None = None,
-) -> DataFrame:
-    """Full-pass merge edges from an already-aggregated candidate-node
-    set (with node text): LSH buckets → pair self-join → exact Jaccard
-    + TF-IDF verify → union with alias-identity edges. Shared by the
-    from-scratch stage C and by stage-C COMPACTION — the periodic full
-    re-score that reconverges an incremental warehouse's frozen pair
-    scores (and drops stale pairs) to the from-scratch state."""
-    buckets = track(node_bucket_rows(nodes))
-    cand = bucket_join_pairs(buckets, buckets)
-    fuzzy = verify_pairs(
-        cand, nodes, jaccard_threshold, cosine_threshold, same_type_only
-    )
-    edges = (
-        alias_identity_edges(nodes).unionByName(fuzzy)
-        .groupBy("a_id", "b_id")
-        .agg(F.max("similarity").alias("similarity"))  # deterministic dedup
-    )
-    if top_n_pairs is not None:
-        # fixture-parity mode (SURVEY §2.6 O2): the reference keeps the
-        # top-30 most-similar pairs globally (merge.py:115 top_n=30)
-        # instead of thresholding. Deterministic ties via pair ids;
-        # TakeOrderedAndProject — no global sort materializes.
-        edges = edges.orderBy(
-            F.desc("similarity"), F.asc("a_id"), F.asc("b_id")
-        ).limit(top_n_pairs)
-    return edges

@@ -30,10 +30,8 @@ from ..operators.canonicalize import (
     alias_identity_edges,
     bucket_join_pairs,
     candidate_nodes,
-    edges_from_candidates,
     merge_candidate_nodes,
     node_bucket_rows,
-    similarity_edges,
     verify_pairs,
     with_node_text,
 )
@@ -194,11 +192,12 @@ def stage_b_extract(cat: Catalog, cfg: PipelineConfig) -> tuple[DataFrame, DataF
     run_id = ckpt.new_run_id()
     t0 = time.time()
     if cfg.resume:
-        committed = ckpt.committed_run_ids(cat)  # one state read, both heals
-        ckpt.reconcile(cat, [
-            "triples_raw", "nodes_raw", "raw_inputs",
-            "quarantine_triples", "quarantine_nodes",
-        ], committed)
+        appended = ["triples_raw", "nodes_raw", "raw_inputs",
+                    "quarantine_triples", "quarantine_nodes"]
+        # one state read for both heals, none while neither has a table
+        committed = (ckpt.committed_run_ids(cat)
+                     if any(map(cat.exists, [*appended, "edges_agg"])) else None)
+        ckpt.reconcile(cat, appended, committed)
         ckpt.reconcile_versions(cat, ["edges_agg"], committed)  # merge table → rollback
     docs = cat.read("documents")
     pending_docs = ckpt.pending(cat, "B_extract", docs) if cfg.resume else docs
@@ -252,27 +251,74 @@ def stage_b_extract(cat: Catalog, cfg: PipelineConfig) -> tuple[DataFrame, DataF
 C_TABLES = ["candidate_nodes", "node_buckets", "node_pairs", "components"]
 
 
-def stage_c_canonicalize(cat: Catalog, cfg: PipelineConfig) -> DataFrame:
-    """Canonicalization, DELTA-AWARE (VERDICT r1 next-step #6).
+def _canonicalize(
+    cat: Catalog, cfg: PipelineConfig, run_id: str,
+    nodes: DataFrame, to_sign: DataFrame, prior: bool,
+) -> tuple[int, int]:
+    """The stage-C core shared by every run: sign ``to_sign``, join its
+    buckets against every persisted bucket, verify the candidates over
+    ``nodes`` (all candidate nodes, with text), and close the merge
+    edges into components. Writes node_buckets, node_pairs and
+    components under ``run_id``; returns the number of nodes signed
+    and of node_pairs rows.
 
-    Canonicalization is global (any new conv can merge any two old
-    nodes), but the expensive parts — candidate aggregation, LSH
-    signatures, the bucket self-join — only need the NEW work:
+    ``prior`` folds in the persisted state: the signatures
+    merge-upsert into node_buckets on (node_id, band) instead of
+    replacing it, the persisted pairs union in (a pair keeps its max
+    score: scores are frozen at their write-time IDF), and components
+    warm-start from the persisted labels. Without it no prior table is
+    read: the run is a from-scratch build."""
+    # counted below node_bucket_rows' empty-token filter: every signed
+    # node (0 when a delta only repeats known nodes)
+    observed, n_to_sign = _counted(to_sign)
+    signed = caching.track(node_bucket_rows(observed))
+    if prior:
+        cat.merge_upsert(signed, "node_buckets", keys=["node_id", "band"], run_id=run_id)
+    else:
+        cat.overwrite(signed, "node_buckets", run_id=run_id)
+    # the write replaced exactly the signed (node_id, band) keys: these
+    # are the signed nodes' candidates against every bucket
+    cand = bucket_join_pairs(signed, cat.read("node_buckets"))
+    edges = alias_identity_edges(nodes).unionByName(
+        verify_pairs(cand, nodes, cfg.jaccard_threshold, cfg.cosine_threshold)
+    )
+    if prior:
+        edges = cat.read("node_pairs").unionByName(edges)
+    edges, n_pairs = _counted(
+        edges.groupBy("a_id", "b_id").agg(F.max("similarity").alias("similarity"))
+    )
+    cat.overwrite(edges, "node_pairs", run_id=run_id)
+    # with prior state edges only get ADDED, so the old component minima
+    # are valid initial labels and propagation converges in ~1 iteration
+    comps = connected_components(
+        nodes.select("node_id"), cat.read("node_pairs"),
+        initial_labels=cat.read("components") if prior else None,
+    )
+    cat.overwrite(comps, "components", run_id=run_id)
+    signed.unpersist()
+    return _n(n_to_sign), _n(n_pairs)
+
+
+def stage_c_canonicalize(cat: Catalog, cfg: PipelineConfig) -> DataFrame:
+    """Canonicalization: one delta-aware path. A from-scratch build is
+    the same run over no prior state.
+
+    With prior state (a resumed warehouse that holds candidate_nodes
+    and node_buckets) only the NEW work runs:
 
     - candidate aggregation runs over pending convs' nodes_raw rows
       only; counts/evidence merge additively into the persisted
       candidate_nodes (merge_candidate_nodes) — never re-aggregates
       the raw history.
     - signatures are computed only for new nodes (or nodes whose
-      aliases changed) and merge-upserted into the persisted
-      node_buckets table on (node_id, band).
-    - the pair join is delta × all-buckets; verified new pairs union
-      into node_pairs. TF-IDF weights for new pairs use the current
-      corpus IDF (scores of already-persisted pairs are not re-opened
-      — the LSM-style freeze; a periodic full recompute is the
-      compaction analog).
-    - components re-run over all pairs — node-scale and O(log n)
-      iterations, the cheap closure.
+      aliases changed) and the pair join is those nodes × all buckets
+      (``_canonicalize``). Scores of persisted pairs are not re-opened
+      (the LSM-style freeze; stage_c_compact is the periodic full
+      re-score).
+    - an empty delta writes nothing but the commit point.
+
+    From scratch (no such tables, or ``resume=False``) the delta is all
+    of nodes_raw, every node is signed, and nothing is folded in.
 
     Atomicity: all four tables commit tagged with this run_id and
     mark_processed lands LAST; reconcile_versions rolls every table
@@ -284,99 +330,42 @@ def stage_c_canonicalize(cat: Catalog, cfg: PipelineConfig) -> DataFrame:
     if cfg.resume:
         ckpt.reconcile_versions(cat, C_TABLES)
     nodes_raw = cat.read("nodes_raw")
-    incremental = (
-        cfg.resume and cat.exists("candidate_nodes") and cat.exists("node_buckets")
+    prior = cfg.resume and cat.exists("candidate_nodes") and cat.exists("node_buckets")
+    delta_raw = (
+        caching.track(ckpt.pending(cat, "C_canonicalize", nodes_raw)) if prior else nodes_raw
     )
-    if not incremental:
-        nodes, edges = similarity_edges(
-            nodes_raw,
-            jaccard_threshold=cfg.jaccard_threshold,
-            cosine_threshold=cfg.cosine_threshold,
-        )
-        nodes = caching.track(nodes)
-        cat.overwrite(node_bucket_rows(nodes), "node_buckets", run_id=run_id)
-        edges, n_pairs = _counted(edges)
-        cat.overwrite(edges, "node_pairs", run_id=run_id)
-        comps = connected_components(nodes.select("node_id"), cat.read("node_pairs"))
-        cat.overwrite(comps, "components", run_id=run_id)
-        # every candidate node is signed on the full path
-        observed, n_nodes = _counted(nodes)
-        cat.overwrite(observed, "candidate_nodes", run_id=run_id)
-        n_signed = _n(n_nodes)
-        nodes.unpersist()
+    if prior and delta_raw.limit(1).count() == 0:
+        n_signed, n_pairs = 0, None  # nothing written: pairs counted from the table
     else:
-        delta_raw = caching.track(ckpt.pending(cat, "C_canonicalize", nodes_raw))
-        old = cat.read("candidate_nodes").drop("text")
-        if delta_raw.limit(1).count() == 0:
-            n_signed = 0
-            n_pairs = None  # nothing written: counted from the table below
-            comps = cat.read("components")
-        else:
-            delta = candidate_nodes(delta_raw)
-            merged = caching.track(with_node_text(merge_candidate_nodes(old, delta)))
+        delta = candidate_nodes(delta_raw)
+        if prior:
+            old = cat.read("candidate_nodes").drop("text")
+            nodes = caching.track(with_node_text(merge_candidate_nodes(old, delta)))
             # re-sign only nodes that are new or whose match-relevant
             # tokens (aliases; the name is fixed by node_id) changed
             empty = F.array().cast("array<string>")
-            prev = old.select(
-                "node_id", F.coalesce("aliases", empty).alias("o_aliases")
-            )
-            to_sign = caching.track(
-                merged.join(prev, "node_id", "left")
+            prev = old.select("node_id", F.coalesce("aliases", empty).alias("o_aliases"))
+            to_sign = (
+                nodes.join(prev, "node_id", "left")
                 .filter(
                     F.col("o_aliases").isNull()
                     | (F.coalesce(F.col("aliases"), empty) != F.col("o_aliases"))
                 )
                 .drop("o_aliases")
             )
-            # counted below node_bucket_rows' empty-token filter: every
-            # re-signed node, filled by the merge's first scan (0 when
-            # the delta only repeats known nodes: nothing to re-sign)
-            observed, n_to_sign = _counted(to_sign)
-            cat.merge_upsert(
-                node_bucket_rows(observed), "node_buckets",
-                keys=["node_id", "band"], run_id=run_id,
-            )
-            n_signed = _n(n_to_sign)
-            all_buckets = cat.read("node_buckets")
-            left = all_buckets.join(to_sign.select("node_id"), "node_id", "left_semi")
-            cand = bucket_join_pairs(left, all_buckets)
-            fuzzy_new = verify_pairs(
-                cand, merged, cfg.jaccard_threshold, cfg.cosine_threshold
-            )
-            edges = (
-                cat.read("node_pairs")
-                .unionByName(alias_identity_edges(merged))
-                .unionByName(fuzzy_new)
-                .groupBy("a_id", "b_id")
-                .agg(F.max("similarity").alias("similarity"))
-            )
-            edges, n_pairs = _counted(edges)
-            cat.overwrite(edges, "node_pairs", run_id=run_id)
-            # warm-start from the previous labels: edges only get
-            # ADDED, so old component minima are valid initial labels
-            # and the propagation converges in ~1 iteration
-            prev_comps = (
-                cat.read("components") if cat.exists("components") else None
-            )
-            comps = connected_components(
-                merged.select("node_id"), cat.read("node_pairs"),
-                initial_labels=prev_comps,
-            )
-            cat.overwrite(comps, "components", run_id=run_id)
-            cat.overwrite(merged, "candidate_nodes", run_id=run_id)
-            merged.unpersist()
-            to_sign.unpersist()
-        ckpt.mark_processed(  # commit point (incremental path)
-            cat, "C_canonicalize", run_id, delta_raw.select("conv_id").distinct()
-        )
+        else:
+            nodes = to_sign = caching.track(with_node_text(delta))
+        n_signed, n_pairs = _canonicalize(cat, cfg, run_id, nodes, to_sign, prior)
+        cat.overwrite(nodes, "candidate_nodes", run_id=run_id)
+        nodes.unpersist()
+    ckpt.mark_processed(  # commit point
+        cat, "C_canonicalize", run_id, delta_raw.select("conv_id").distinct()
+    )
+    if prior:
         delta_raw.unpersist()
-    if not incremental:
-        ckpt.mark_processed(  # commit point (full path)
-            cat, "C_canonicalize", run_id, nodes_raw.select("conv_id").distinct()
-        )
     ckpt.write_metrics(cat, "C_canonicalize", run_id, {
         "n_candidate_pairs": (
-            cat.read("node_pairs").count() if n_pairs is None else _n(n_pairs)
+            cat.read("node_pairs").count() if n_pairs is None else n_pairs
         ),
         "n_signatures_computed": n_signed,
         "wall_s": time.time() - t0,
@@ -385,31 +374,23 @@ def stage_c_canonicalize(cat: Catalog, cfg: PipelineConfig) -> DataFrame:
 
 
 def stage_c_compact(cat: Catalog, cfg: PipelineConfig) -> None:
-    """Stage-C COMPACTION — the 'LSM-style freeze' counterpart promised
-    in similarity_edges's docstring: incremental runs score new pairs
-    with the IDF of their write time and never re-open (or delete)
-    persisted pairs, so a long-lived warehouse slowly drifts from what
-    a from-scratch build would score. This maintenance pass recomputes
-    signatures, buckets, candidate pairs and TF-IDF from the CURRENT
-    candidate_nodes and overwrites node_buckets/node_pairs/components —
-    after it, the warehouse is byte-equal to a from-scratch stage C
-    (tested). O(distinct nodes); run on a table-maintenance cadence,
-    like Iceberg rewrite_data_files."""
+    """Stage-C COMPACTION — the periodic full re-score behind the
+    incremental path's 'LSM-style freeze': incremental runs score new
+    pairs with the IDF of their write time and never re-open (or
+    delete) persisted pairs, so a long-lived warehouse slowly drifts
+    from what a from-scratch build would score. This maintenance pass
+    runs the stage-C core over the CURRENT candidate_nodes with every
+    node re-signed and no prior state, overwriting
+    node_buckets/node_pairs/components — after it, the warehouse is
+    byte-equal to a from-scratch stage C (tested). O(distinct nodes);
+    run on a table-maintenance cadence, like Iceberg
+    rewrite_data_files."""
     run_id = ckpt.new_run_id()
     t0 = time.time()
     if cfg.resume:
         ckpt.reconcile_versions(cat, C_TABLES)
     nodes = caching.track(cat.read("candidate_nodes"))
-    edges = edges_from_candidates(
-        nodes,
-        jaccard_threshold=cfg.jaccard_threshold,
-        cosine_threshold=cfg.cosine_threshold,
-    )
-    cat.overwrite(node_bucket_rows(nodes), "node_buckets", run_id=run_id)
-    edges, n_pairs = _counted(edges)
-    cat.overwrite(edges, "node_pairs", run_id=run_id)
-    comps = connected_components(nodes.select("node_id"), cat.read("node_pairs"))
-    cat.overwrite(comps, "components", run_id=run_id)
+    _, n_pairs = _canonicalize(cat, cfg, run_id, nodes, nodes, prior=False)
     # commit point: sentinel state row makes the three overwrites one
     # atomic unit for reconcile_versions
     ckpt.mark_processed(
@@ -417,7 +398,7 @@ def stage_c_compact(cat: Catalog, cfg: PipelineConfig) -> None:
         cat.spark.createDataFrame([("__all__",)], "conv_id string"),
     )
     ckpt.write_metrics(cat, "C_compact", run_id, {
-        "n_candidate_pairs": _n(n_pairs),
+        "n_candidate_pairs": n_pairs,
         "wall_s": time.time() - t0,
     })
     caching.release_caches()

@@ -10,11 +10,10 @@ from aisafetyintervention_literatureextraction_spark.functions.text import node_
 from aisafetyintervention_literatureextraction_spark.ontology import CANONICAL_ALIASES
 from aisafetyintervention_literatureextraction_spark.operators.canonicalize import (
     _feature_tokens,
+    alias_identity_edges,
     bucket_join_pairs,
     candidate_nodes,
-    edges_from_candidates,
     node_bucket_rows,
-    similarity_edges,
     verify_pairs,
     with_node_text,
 )
@@ -57,11 +56,25 @@ def _nodes_raw(spark, corpus):
     return extract_nodes(docs, engine="sql")
 
 
+def _merge_edges(nodes, jaccard_threshold, cosine_threshold):
+    """Stage C's from-scratch edge plan over ``nodes``: the bucket
+    self-join verified, unioned with the alias-identity edges, one row
+    per pair at its max similarity."""
+    buckets = node_bucket_rows(nodes)
+    fuzzy = verify_pairs(
+        bucket_join_pairs(buckets, buckets), nodes, jaccard_threshold, cosine_threshold
+    )
+    return (
+        alias_identity_edges(nodes).unionByName(fuzzy)
+        .groupBy("a_id", "b_id").agg(F.max("similarity").alias("similarity"))
+    )
+
+
 def test_alias_clusters_merge(spark, corpus):
     """Every CANONICAL_ALIASES cluster collapses to one component;
     golden nodes never merge with each other."""
-    nr = _nodes_raw(spark, corpus)
-    nodes, edges = similarity_edges(nr)
+    nodes = with_node_text(candidate_nodes(_nodes_raw(spark, corpus))).persist()
+    edges = _merge_edges(nodes, 0.6, 0.7)
     comps = connected_components(nodes.select("node_id"), edges)
     labeled = {
         r["name"]: r["component_id"]
@@ -72,6 +85,7 @@ def test_alias_clusters_merge(spark, corpus):
         cids = {labeled[v] for v in variants if v in labeled}
         assert len(cids) == 1, f"cluster {canon} split: {cids}"
     golden_cids = [labeled[n] for n in GOLDEN_NODES if n in labeled]
+    nodes.unpersist()
     assert len(set(golden_cids)) == len(golden_cids), "golden nodes over-merged"
 
 
@@ -112,7 +126,7 @@ def test_verify_plan_build_runs_no_job(spark, corpus):
     try:
         buckets = node_bucket_rows(nodes)
         pairs = verify_pairs(bucket_join_pairs(buckets, buckets), nodes, 0.5, 0.6)
-        edges = edges_from_candidates(nodes, 0.5, 0.6)
+        edges = _merge_edges(nodes, 0.5, 0.6)
         built = list(sc.statusTracker().getJobIdsForGroup(group))
         # the group does capture jobs: the first action shows up in it
         pairs.count()
@@ -146,30 +160,6 @@ def test_candidate_nodes_lww(spark):
     assert out[0]["description"] == "new desc"  # c2 > c1
     assert out[0]["n_occurrences"] == 2
     assert sorted(out[0]["conv_ids"]) == ["c1", "c2"]
-
-
-def test_top_n_pairs_fixture_parity(spark, corpus):
-    """Reference merge.py:115 keeps the global top-30 most-similar
-    pairs; with N ≥ the threshold-mode edge count the two modes agree
-    exactly, and with smaller N the result is the deterministic
-    highest-similarity prefix."""
-    nr = _nodes_raw(spark, corpus)
-    _, thresh_edges = similarity_edges(nr)
-    n_edges = thresh_edges.count()
-    _, top_edges = similarity_edges(nr, top_n_pairs=n_edges + 10)
-    assert (
-        sorted(map(tuple, top_edges.select("a_id", "b_id").collect()))
-        == sorted(map(tuple, thresh_edges.select("a_id", "b_id").collect()))
-    )
-    _, top3 = similarity_edges(nr, top_n_pairs=3)
-    rows = top3.collect()
-    assert len(rows) == 3
-    # the prefix is the deterministic top of the full ranking
-    full_top3 = sorted(
-        ((-r["similarity"], r["a_id"], r["b_id"]) for r in thresh_edges.collect())
-    )[:3]
-    got = sorted((-r["similarity"], r["a_id"], r["b_id"]) for r in rows)
-    assert got == full_top3
 
 
 def test_delta_path_hot_bucket_cap_bounds_skew(spark):

@@ -190,6 +190,34 @@ def test_reconcile_helper(spark, catalog):
     assert catalog.read("out").count() == 0
 
 
+def test_reconcile_absent_tables_runs_no_job(spark, catalog):
+    """A heal over tables that do not exist yet (a fresh build's stages
+    C-E) has nothing to roll back, so it reads no committed set (a
+    state scan, distinct and collect) and submits no Spark job, even
+    with the state table present."""
+    ckpt.mark_processed(
+        catalog, "A_reassemble", "r1", spark.createDataFrame([("c1",)], "conv_id string")
+    )
+    catalog.overwrite(spark.createDataFrame([(1,)], "k int"), "present", run_id="r1")
+    sc = spark.sparkContext
+    group = "reconcile-absent-tables"
+    sc.setJobGroup(group, "heal absent tables")
+    try:
+        rolled = ckpt.reconcile_versions(catalog, ["node_pairs", "components"])
+        pruned = ckpt.reconcile(catalog, ["kg_nodes"])
+        healed = list(sc.statusTracker().getJobIdsForGroup(group))
+        # the group does capture jobs: a present table's heal reads the set
+        assert ckpt.reconcile_versions(catalog, ["present"]) == {"present": 0}
+        read = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert rolled == {} and pruned == {}
+    assert healed == [], f"heal of absent tables ran jobs {healed}"
+    assert read
+
+
 def test_empty_append_and_read_or_empty(spark, catalog):
     empty = spark.createDataFrame([], "k string, v int")
     catalog.append(empty, "t")

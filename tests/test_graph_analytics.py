@@ -316,6 +316,7 @@ GOLDEN_DIGESTS = {
     "kg_edges": "64d3c6daae911147c2c5f5ae14246143b37deef0097fa89a4834d948c74feee6",
     "kg_node_metrics": "ad04ff435714ae0bdc8329fb3360901f57032d5e36d246be55103459aecad49c",
     "kg_edge_metrics": "8d3ce2c7c309666180c11ebd17ef354e2bda8185e0611c004fefd83686705e10",
+    "node_buckets": "94b55e64267a975a5aa5e8a6717689ff5dfced517d5eb8b8d71732647395233c",
 }
 
 

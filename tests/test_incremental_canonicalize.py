@@ -137,7 +137,9 @@ def test_compaction_reconverges_to_from_scratch(spark, corpus, warehouse, tmp_pa
     """VERDICT r2 next-step #8: incremental runs freeze persisted pair
     scores at their write-time IDF (and never drop stale pairs);
     stage_c_compact's full re-score must land the warehouse on exactly
-    the from-scratch node_pairs/components state."""
+    the from-scratch node_buckets/node_pairs/components state."""
+    from digest import table_digest
+
     from aisafetyintervention_literatureextraction_spark.plans.pipeline import (
         stage_c_compact,
     )
@@ -160,6 +162,7 @@ def test_compaction_reconverges_to_from_scratch(spark, corpus, warehouse, tmp_pa
     stage_c_compact(cat, cfg)
     assert _pair_scores(cat) == _pair_scores(cat2)
     assert _canon_state(cat) == _canon_state(cat2)
+    assert table_digest(cat, "node_buckets") == table_digest(cat2, "node_buckets")
 
     # compaction is idempotent
     before = _pair_scores(cat)
