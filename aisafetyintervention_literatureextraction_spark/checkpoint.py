@@ -71,6 +71,18 @@ def pending_files(catalog: Catalog, stage: str, files: DataFrame,
         key, "left_anti")
 
 
+def state_rows(
+    stage: str, run_id: str, conv_ids: DataFrame, key: str = "conv_id"
+) -> DataFrame:
+    """The state-table rows marking ``conv_ids`` processed by ``stage``
+    under ``run_id``."""
+    return conv_ids.select(
+        F.lit(stage).alias("stage"),
+        F.col(key).cast("string").alias("conv_id"),
+        F.lit(run_id).alias("run_id"),
+    )
+
+
 def mark_processed(
     catalog: Catalog, stage: str, run_id: str, conv_ids: DataFrame, key: str = "conv_id"
 ) -> None:
@@ -78,12 +90,7 @@ def mark_processed(
     are considered committed iff its run_id appears in the state table
     (see ``reconcile``) — so this must be the LAST catalog write of
     the stage's exactly-once window."""
-    rows = conv_ids.select(
-        F.lit(stage).alias("stage"),
-        F.col(key).cast("string").alias("conv_id"),
-        F.lit(run_id).alias("run_id"),
-    )
-    catalog.append(rows, STATE)
+    catalog.append(state_rows(stage, run_id, conv_ids, key), STATE)
 
 
 def committed_run_ids(catalog: Catalog) -> set[str]:

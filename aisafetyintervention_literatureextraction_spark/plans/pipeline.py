@@ -16,9 +16,9 @@ Designed to be submitted as ``spark-submit --py-files kgspark.zip
 from __future__ import annotations
 
 import argparse
-import os
 import time
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -78,37 +78,10 @@ def _n(obs: Observation) -> int:
     return row.getLong(0) if row.length() else 0
 
 
-def stage_a_reassemble(cat: Catalog, transcripts: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    run_id = ckpt.new_run_id()
-    t0 = time.time()
-    if cfg.resume:
-        # heal any crash between output commits and the state commit
-        # (manifest-level, O(entries)) before computing the pending set
-        ckpt.reconcile(cat, ["documents", "quarantine"])
-    inp = ckpt.pending(cat, "A_reassemble", transcripts) if cfg.resume else transcripts
-    res = reassemble(inp, salt_segment=cfg.salt_segment, allow_gaps=cfg.allow_gaps)
-    # both deltas are multi-consumer (append + mark + lineage/metrics):
-    # persist so reassembly runs once, and keep every per-run artifact
-    # O(delta) — lineage/metrics over the whole table would silently
-    # reintroduce the O(history)-per-run scan the catalog just removed
-    docs = caching.track(res.documents)
-    quarantine = caching.track(res.quarantine)
-    observed, n_docs = _counted(docs)
-    cat.append(observed, "documents", run_id=run_id)
-    # unconditional append: an empty delta writes an empty entry —
-    # cheaper than the limit(1).count() existence probe job that used
-    # to gate this (r3 VERDICT nit), and the table existing (possibly
-    # empty) is the steady state anyway
-    cat.append(quarantine, "quarantine", run_id=run_id)
-    processed = docs.select("conv_id").union(quarantine.select("conv_id")).distinct()
-    ckpt.mark_processed(cat, "A_reassemble", run_id, processed)  # commit point
-    ckpt.write_lineage(cat, "A_reassemble", run_id, docs)
-    ckpt.write_metrics(cat, "A_reassemble", run_id, {
-        "n_documents_delta": _n(n_docs), "wall_s": time.time() - t0,
-    })
-    docs.unpersist()
-    quarantine.unpersist()
-    return cat.read("documents")
+# the tables stages A and B append to, healed entry-wise on resume
+A_TABLES = ["documents", "quarantine"]
+B_TABLES = ["raw_inputs", "triples_raw", "nodes_raw",
+            "quarantine_triples", "quarantine_nodes"]
 
 
 def normalize_preassembled(docs: DataFrame) -> DataFrame:
@@ -116,8 +89,7 @@ def normalize_preassembled(docs: DataFrame) -> DataFrame:
     feed) → the DOCUMENTS table shape plus a ``__reason`` column: the
     classified per-row quarantine reason (e.g. the PDF decoder's
     encrypted_pdf vs undecodable_document) when the source provides
-    one.  Shared by batch stage A and the streaming per-batch bodies
-    so both paths land byte-identical rows."""
+    one."""
     if "n_turns" not in docs.columns:
         docs = docs.withColumn("n_turns", F.lit(1))
     for prov in ("title", "author"):  # provenance optional per source
@@ -148,76 +120,86 @@ def normalize_preassembled(docs: DataFrame) -> DataFrame:
     )
 
 
-def stage_a_ingest_documents(
-    cat: Catalog, docs: DataFrame, cfg: PipelineConfig
-) -> DataFrame:
-    """Stage-A twin for PRE-ASSEMBLED documents — the reference's
-    actual input shape (a directory of PDFs, extract.py:65): rows of
-    ``(conv_id, doc_text [, n_turns])`` land in the ``documents``
-    table directly (no reassembly window needed), null-text rows
-    quarantine, and the ``A_reassemble`` processed set is marked so
-    stages B-D and the resume anti-joins compose identically with the
-    transcript path."""
-    run_id = ckpt.new_run_id()
-    t0 = time.time()
-    if cfg.resume:
-        ckpt.reconcile(cat, ["documents", "quarantine"])
-    docs = normalize_preassembled(docs)
-    pending = ckpt.pending(cat, "A_reassemble", docs) if cfg.resume else docs
+def documents_delta(
+    fmt: str, rows: DataFrame, cfg: PipelineConfig, pending=None,
+) -> tuple[DataFrame, DataFrame]:
+    """The per-source document adapter of batch and stream runs alike:
+    one batch of ``fmt`` source rows → its (documents, quarantine)
+    delta.  ``rows`` are transcript turns, decoded PDF rows or ARD
+    articles.  ``pending`` (a DataFrame → DataFrame filter on conv_id)
+    drops already-processed ids: below the reassembly for transcripts,
+    on the adapted documents for the pre-assembled sources."""
+    pending = pending or (lambda df: df)
+    if fmt == "transcripts":
+        res = reassemble(pending(rows), salt_segment=cfg.salt_segment,
+                         allow_gaps=cfg.allow_gaps)
+        return res.documents, res.quarantine
+    if fmt == "pdf":  # operators/pdf.decode_pdf_text rows
+        rows = rows.select(
+            "conv_id", F.col("n_pages").alias("n_turns"), "doc_text",
+            "title", "author",  # /Info provenance → documents → D
+            F.col("decode_error").alias("quarantine_reason"))
+    else:
+        from ..sources.ard import ard_as_documents
+
+        rows = ard_as_documents(rows).filter(
+            F.col("conv_id").isNotNull()  # no url AND no title: unkeyable
+        )
+    docs = pending(normalize_preassembled(rows))
     # a failed decode yields null text; a structurally-valid file with
     # no extractable text yields "" — both are undecodable for a text
     # pipeline and quarantine rather than flowing into extraction
     usable = F.col("doc_text").isNotNull() & (F.length("doc_text") > 0)
-    good = caching.track(pending.filter(usable).drop("__reason"))
-    bad = caching.track(
-        pending.filter(~usable | F.col("doc_text").isNull()).select(
-            "conv_id", F.col("__reason").alias("reason")
-        )
+    return (
+        docs.filter(usable).drop("__reason"),
+        docs.filter(~usable | F.col("doc_text").isNull()).select(
+            "conv_id", F.col("__reason").alias("reason")),
     )
-    observed, n_good = _counted(good)
+
+
+def land_documents(
+    cat: Catalog, run_id: str, docs: DataFrame, quarantine: DataFrame,
+) -> tuple[DataFrame, DataFrame, DataFrame, Observation]:
+    """Stage A's landing step for one (documents, quarantine) delta:
+    both append under ``run_id``.  Returns the cached deltas, their
+    processed conv_ids and the documents count; the caller commits."""
+    # both deltas are multi-consumer (append + processed set + lineage
+    # or extraction): persist so the adapter runs once, and keep every
+    # per-run artifact O(delta)
+    docs = caching.track(docs)
+    quarantine = caching.track(quarantine)
+    observed, n_docs = _counted(docs)
     cat.append(observed, "documents", run_id=run_id)
-    cat.append(bad, "quarantine", run_id=run_id)  # empty delta is fine
-    processed = good.select("conv_id").union(bad.select("conv_id")).distinct()
-    ckpt.mark_processed(cat, "A_reassemble", run_id, processed)  # commit point
-    ckpt.write_lineage(cat, "A_reassemble", run_id, good)
-    ckpt.write_metrics(cat, "A_reassemble", run_id, {
-        "n_documents_delta": _n(n_good), "wall_s": time.time() - t0,
-    })
-    good.unpersist()
-    bad.unpersist()
-    return cat.read("documents")
+    # unconditional append: an empty delta writes an empty entry —
+    # cheaper than a limit(1).count() existence probe job
+    cat.append(quarantine, "quarantine", run_id=run_id)
+    processed = docs.select("conv_id").union(quarantine.select("conv_id")).distinct()
+    return docs, quarantine, processed, n_docs
 
 
-def stage_b_extract(cat: Catalog, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame]:
-    run_id = ckpt.new_run_id()
-    t0 = time.time()
-    if cfg.resume:
-        appended = ["triples_raw", "nodes_raw", "raw_inputs",
-                    "quarantine_triples", "quarantine_nodes"]
-        # one state read for both heals, none while neither has a table
-        committed = (ckpt.committed_run_ids(cat)
-                     if any(map(cat.exists, [*appended, "edges_agg"])) else None)
-        ckpt.reconcile(cat, appended, committed)
-        ckpt.reconcile_versions(cat, ["edges_agg"], committed)  # merge table → rollback
-    docs = cat.read("documents")
-    pending_docs = ckpt.pending(cat, "B_extract", docs) if cfg.resume else docs
-    pending_docs = caching.track(pending_docs)
+def extract_documents(
+    cat: Catalog, cfg: PipelineConfig, run_id: str, docs: DataFrame,
+) -> tuple[DataFrame, Observation]:
+    """Stage B's extraction step over one documents delta (``docs``,
+    cached by the caller): the raw-input audit copy, extraction,
+    validation routing into four appends and the ``edges_agg`` merge,
+    all under ``run_id``.  Returns the valid triples and their count,
+    which fills on the triples_raw append; the caller commits, then
+    releases the extraction caches with ``caching.release_caches``."""
     # K2 raw-input audit: persist the batch EXACTLY as handed to
     # extraction (reference extract.py:77-80 keeps the raw response per
     # paper for replay; ours keeps the pre-extraction document) — the
     # replay contract is re-extracting from raw_inputs reproduces
     # triples_raw byte-identically (tested).
     cat.append(
-        pending_docs.select(
-            F.lit(run_id).alias("run_id"), "conv_id", "n_turns", "doc_text"
-        ),
+        docs.select(F.lit(run_id).alias("run_id"), "conv_id", "n_turns", "doc_text"),
         "raw_inputs", run_id=run_id,
     )
     # extraction outputs are cached: validation routing consumes each
     # twice (valid + quarantine appends) and extraction is the
     # expensive part of this stage
-    triples = caching.track(extract_triples(pending_docs, engine=cfg.extract_engine))
-    nodes = caching.track(extract_nodes(pending_docs, engine=cfg.extract_engine))
+    triples = caching.track(extract_triples(docs, engine=cfg.extract_engine))
+    nodes = caching.track(extract_nodes(docs, engine=cfg.extract_engine))
     t_ok, t_bad = validate_triples(triples)
     n_ok, n_bad = validate_nodes(nodes)
     observed, n_t_ok = _counted(t_ok)
@@ -232,6 +214,50 @@ def stage_b_extract(cat: Catalog, cfg: PipelineConfig) -> tuple[DataFrame, DataF
         aggregate_raw_edges(t_ok), "edges_agg",
         keys=["subj", "pred", "obj"], combiner=edge_agg_combiner, run_id=run_id,
     )
+    return t_ok, n_t_ok
+
+
+def stage_a_reassemble(cat: Catalog, transcripts: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    return _stage_a(cat, cfg, "transcripts", transcripts)
+
+
+def _stage_a(cat: Catalog, cfg: PipelineConfig, fmt: str, rows: DataFrame) -> DataFrame:
+    """Batch stage A over one ``fmt`` source: land the pending rows'
+    (documents, quarantine) delta and commit the ``A_reassemble``
+    processed set, so stages B-D and the resume anti-joins compose
+    identically for every source."""
+    run_id = ckpt.new_run_id()
+    t0 = time.time()
+    if cfg.resume:
+        # heal any crash between output commits and the state commit
+        # (manifest-level, O(entries)) before computing the pending set
+        ckpt.reconcile(cat, A_TABLES)
+    pending = partial(ckpt.pending, cat, "A_reassemble") if cfg.resume else None
+    docs, quarantine, processed, n_docs = land_documents(
+        cat, run_id, *documents_delta(fmt, rows, cfg, pending))
+    ckpt.mark_processed(cat, "A_reassemble", run_id, processed)  # commit point
+    ckpt.write_lineage(cat, "A_reassemble", run_id, docs)
+    ckpt.write_metrics(cat, "A_reassemble", run_id, {
+        "n_documents_delta": _n(n_docs), "wall_s": time.time() - t0,
+    })
+    docs.unpersist()
+    quarantine.unpersist()
+    return cat.read("documents")
+
+
+def stage_b_extract(cat: Catalog, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame]:
+    run_id = ckpt.new_run_id()
+    t0 = time.time()
+    if cfg.resume:
+        # one state read for both heals, none while neither has a table
+        committed = (ckpt.committed_run_ids(cat)
+                     if any(map(cat.exists, [*B_TABLES, "edges_agg"])) else None)
+        ckpt.reconcile(cat, B_TABLES, committed)
+        ckpt.reconcile_versions(cat, ["edges_agg"], committed)  # merge table → rollback
+    docs = cat.read("documents")
+    pending_docs = ckpt.pending(cat, "B_extract", docs) if cfg.resume else docs
+    pending_docs = caching.track(pending_docs)
+    t_ok, n_t_ok = extract_documents(cat, cfg, run_id, pending_docs)
     ckpt.mark_processed(cat, "B_extract", run_id, pending_docs.select("conv_id"))  # commit point
     # lineage/metrics describe THIS run's delta (O(delta), and the
     # per-partition conv_id ranges of the run's output are the useful
@@ -242,9 +268,7 @@ def stage_b_extract(cat: Catalog, cfg: PipelineConfig) -> tuple[DataFrame, DataF
         "n_triples_delta": n_delta, "wall_s": time.time() - t0,
         "triples_per_sec": n_delta / max(time.time() - t0, 1e-9),
     })
-    triples.unpersist()
-    nodes.unpersist()
-    pending_docs.unpersist()
+    caching.release_caches()  # pending_docs and the extraction caches
     return cat.read("triples_raw"), cat.read("nodes_raw")
 
 
@@ -646,13 +670,17 @@ def run_pipeline(
         raise ValueError(why)
     cfg = PipelineConfig(warehouse=warehouse, **kwargs)
     cat = Catalog(spark, warehouse)
+    glob = glob or "*.pdf"
     t0 = time.time()
     if stream:
-        state = _stream_ab(spark, cat, cfg, fmt, source, cd_every, glob)
+        from ..streaming.catalog_sink import stream_pipeline_to_catalog
+
+        state = stream_pipeline_to_catalog(spark, source, cfg, fmt=fmt,
+                                           cd_every=cd_every, glob=glob)
         catch_up = not state["cd_on_last"]
     else:
-        _ingest_batch(spark, cat, cfg, fmt, source, glob or "*.pdf",
-                      extract_images, modified_after)
+        _ingest_batch(spark, cat, cfg, fmt, source, glob, extract_images,
+                      modified_after)
         stage_b_extract(cat, cfg)
         catch_up = True
     if catch_up:
@@ -682,27 +710,6 @@ def run_pipeline(
     return stats
 
 
-def _stream_ab(spark: SparkSession, cat: Catalog, cfg: PipelineConfig,
-               fmt: str, source: str, cd_every: int | None,
-               glob: str | None) -> dict:
-    """Stream adapter: stages A+B (and C+D every ``cd_every``
-    micro-batches) through the ``fmt`` catalog sink; returns its
-    batch/trigger state."""
-    from ..streaming import catalog_sink as sink
-
-    kw = dict(
-        checkpoint_path=os.path.join(cfg.warehouse, "_stream_ckpt"),
-        extract_engine=cfg.extract_engine, cd_every=cd_every, cd_cfg=cfg,
-    )
-    if fmt == "transcripts":
-        return sink.stream_pipeline_to_catalog(
-            spark, source, cat, salt_segment=cfg.salt_segment, **kw)
-    if fmt == "pdf":
-        return sink.stream_pdf_pipeline_to_catalog(
-            spark, source, cat, glob=glob or "*.pdf", **kw)
-    return sink.stream_ard_pipeline_to_catalog(spark, source, cat, **kw)
-
-
 def _ingest_batch(spark: SparkSession, cat: Catalog, cfg: PipelineConfig,
                   fmt: str, source, glob: str, extract_images: bool,
                   modified_after: str | None) -> None:
@@ -718,12 +725,9 @@ def _ingest_batch(spark: SparkSession, cat: Catalog, cfg: PipelineConfig,
         stage_a_reassemble(cat, source, cfg)
         return
     if fmt == "ard":
-        from ..sources.ard import ard_as_documents, read_ard
+        from ..sources.ard import read_ard
 
-        docs = ard_as_documents(read_ard(spark, source)).filter(
-            F.col("conv_id").isNotNull()  # no url AND no title: unkeyable
-        )
-        stage_a_ingest_documents(cat, docs, cfg)
+        _stage_a(cat, cfg, "ard", read_ard(spark, source))
         return
 
     from ..operators.pdf import decode_pdf_text
@@ -731,10 +735,6 @@ def _ingest_batch(spark: SparkSession, cat: Catalog, cfg: PipelineConfig,
 
     files = read_raw_files(spark, source, glob=glob,
                            modified_after=modified_after)
-    doc_cols = ("conv_id", F.col("n_pages").alias("n_turns"), "doc_text",
-                "title", "author",  # /Info provenance → documents → D
-                F.col("decode_error").alias("quarantine_reason"))
-
     if not extract_images:
         # the resume skip must land on the FILE scan (stem key,
         # broadcast anti-join): stage A's own pending() anti-join keys
@@ -743,8 +743,7 @@ def _ingest_batch(spark: SparkSession, cat: Catalog, cfg: PipelineConfig,
         # whole corpus just to drop the rows afterwards
         src = (ckpt.pending_files(cat, "A_reassemble", files)
                if cfg.resume else files)
-        stage_a_ingest_documents(cat, decode_pdf_text(src).select(*doc_cols),
-                                 cfg)
+        _stage_a(cat, cfg, "pdf", decode_pdf_text(src))
         return
 
     # text + images from ONE parse: a file is parsed iff it is pending
@@ -762,7 +761,7 @@ def _ingest_batch(spark: SparkSession, cat: Catalog, cfg: PipelineConfig,
                 files, done_docs.join(done_imgs, "conv_id", "left_semi"),
                 id_col="conv_id")
     combined = caching.track(decode_pdf_text(src, with_images=True))
-    stage_a_ingest_documents(cat, combined.select(*doc_cols), cfg)
+    _stage_a(cat, cfg, "pdf", combined)
     img_run = ckpt.new_run_id()
     img_src = combined
     done_imgs = ckpt.done_ids(cat, "A_images") if cfg.resume else None

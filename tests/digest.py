@@ -5,6 +5,8 @@ sorted, so it is independent of file and partition order.  Doubles are
 rounded to 12 decimals (a reordered floating-point sum may move the
 last bits) and array elements are sorted (``collect_set`` order is not
 part of any table's contract); struct fields keep their order.
+``exact_rows(cat, name)`` is the strict form for equality checks
+between two warehouses.
 """
 
 from __future__ import annotations
@@ -30,6 +32,16 @@ def table_rows(df) -> list[str]:
     """Normalized rows of ``df`` as sorted reprs."""
     cols = df.columns
     return sorted(repr(tuple(_norm(r[c]) for c in cols)) for r in df.collect())
+
+
+def exact_rows(cat, name: str) -> list[str]:
+    """Rows of table ``name`` as sorted reprs of every value as
+    collected (no float rounding, no array sorting), in sorted
+    column-name order: two tables compare equal only when they hold the
+    same rows value for value, whatever their column order."""
+    df = cat.read(name)
+    cols = sorted(df.columns)
+    return sorted(repr(tuple(r[c] for c in cols)) for r in df.collect())
 
 
 def table_digest(cat, name: str) -> str:

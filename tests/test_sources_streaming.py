@@ -1,10 +1,11 @@
 """Source + streaming tests: ARD JSONL (S6), transcripts reader (S1),
-catalog merge_upsert (K5), AvailableNow incremental reassembly."""
+catalog merge_upsert (K5), the exactly-once A+B stream."""
 
 import json
 import os
 
 import pyspark.sql.functions as F
+from digest import exact_rows
 
 from aisafetyintervention_literatureextraction_spark.sources.ard import (
     ard_as_documents,
@@ -12,9 +13,6 @@ from aisafetyintervention_literatureextraction_spark.sources.ard import (
 )
 from aisafetyintervention_literatureextraction_spark.sources.transcripts import (
     read_transcripts,
-)
-from aisafetyintervention_literatureextraction_spark.streaming.reassembly_stream import (
-    stream_reassemble_available_now,
 )
 
 
@@ -83,80 +81,69 @@ def test_catalog_merge_upsert(spark, catalog):
     assert {r["k"] for r in prev.collect()} == {"a", "b"}
 
 
-def test_stream_reassembly_available_now(spark, corpus, warehouse):
-    df, _ = corpus
-    src = os.path.join(warehouse, "stream_src")
-    sink = os.path.join(warehouse, "stream_sink")
-    ckpt = os.path.join(warehouse, "stream_ckpt")
-    clean = df.filter(~F.col("conv_id").isin("conv_dup", "conv_gap"))
-    clean.write.parquet(src)
+def test_stream_micro_batch_exactly_once(spark, corpus, tmp_path,
+                                         monkeypatch):
+    """§2.11 exactly-once through the stream's micro-batch body: a
+    straight replay of a committed batch (same batch_id) is skipped and
+    adds no rows; a TORN batch (its data landed under the next batch's
+    run_id, its commit point lost) is pruned on retry, leaving no
+    duplicate rows.  The per-format run_id prefixes are fixed: a replay
+    against an existing warehouse finds its committed batches by them."""
+    import pytest
 
-    stream_reassemble_available_now(spark, src, sink, ckpt)
-    got = spark.read.parquet(sink)
-    batch = (
-        __import__(
-            "aisafetyintervention_literatureextraction_spark.operators.reassembly",
-            fromlist=["reassemble"],
-        ).reassemble(clean).documents
-    )
-    cols = ["conv_id", "n_turns", "doc_text"]
-    assert sorted(map(tuple, got.select(cols).collect())) == sorted(
-        map(tuple, batch.select(cols).collect())
-    )
-
-    # re-trigger with no new data → no duplicates (offset checkpoint)
-    stream_reassemble_available_now(spark, src, sink, ckpt)
-    assert spark.read.parquet(sink).count() == got.count()
-
-
-def test_exactly_once_catalog_sink(spark, catalog):
-    """§2.11 exactly-once sink: a replayed micro-batch (same batch_id)
-    is skipped; a TORN batch (data appended, commit point lost) heals
-    on retry instead of duplicating rows."""
     from aisafetyintervention_literatureextraction_spark import checkpoint as ckpt
+    from aisafetyintervention_literatureextraction_spark.catalog import Catalog
+    from aisafetyintervention_literatureextraction_spark.plans.pipeline import (
+        PipelineConfig,
+        stage_a_reassemble,
+        stage_b_extract,
+    )
     from aisafetyintervention_literatureextraction_spark.streaming.catalog_sink import (
-        exactly_once_append,
+        STREAM_IDS,
+        process_micro_batch,
     )
 
-    mk = lambda rows: spark.createDataFrame(rows, "conv_id string, v int")
-
-    assert exactly_once_append(catalog, "docs", mk([("a", 1)]), 0, "s") == "appended"
-    # straight replay of the same batch: skipped, no duplicates
-    assert exactly_once_append(catalog, "docs", mk([("a", 1)]), 0, "s") == "skipped"
-    assert catalog.read("docs").count() == 1
-
-    # torn batch: simulate by appending batch 1's data WITHOUT its
-    # commit point, then retrying through the sink
-    catalog.append(mk([("b", 2)]), "docs", run_id="s-b1")
-    assert catalog.read("docs").count() == 2
-    assert exactly_once_append(catalog, "docs", mk([("b", 2)]), 1, "s") == "appended"
-    got = sorted((r["conv_id"], r["v"]) for r in catalog.read("docs").collect())
-    assert got == [("a", 1), ("b", 2)]
-    assert "s-b0" in ckpt.committed_run_ids(catalog)
-
-
-def test_stream_reassemble_to_catalog_idempotent(spark, corpus, catalog, tmp_path):
-    """AvailableNow drain into the catalog: a second run over the same
-    source (fresh streaming checkpoint — worst case: ALL offsets
-    replay) leaves the documents table unchanged."""
-    from aisafetyintervention_literatureextraction_spark.streaming.catalog_sink import (
-        stream_reassemble_to_catalog,
-    )
-
+    assert STREAM_IDS == {"transcripts": "ab", "pdf": "pdf", "ard": "ard"}
     df, _ = corpus
-    src = str(tmp_path / "src")
-    df.write.mode("overwrite").parquet(src)
+    convs = sorted(r["conv_id"] for r in df.select("conv_id").distinct().collect())
+    first = F.col("conv_id").isin(convs[: len(convs) // 2])
+    b0, b1 = df.filter(first), df.filter(~first)
+    tables = ["documents", "quarantine", "triples_raw", "nodes_raw", "edges_agg"]
 
-    stream_reassemble_to_catalog(
-        spark, src, catalog, checkpoint_path=str(tmp_path / "ck1")
-    )
-    n1 = catalog.read("documents").count()
-    assert n1 > 0
-    # replay EVERYTHING (new checkpoint dir → batch ids restart at 0)
-    stream_reassemble_to_catalog(
-        spark, src, catalog, checkpoint_path=str(tmp_path / "ck2")
-    )
-    assert catalog.read("documents").count() == n1
+    wh = str(tmp_path / "wh_s")
+    cat, cfg = Catalog(spark, wh), PipelineConfig(warehouse=wh)
+    assert process_micro_batch(cat, cfg, "transcripts", b0, 0) == "appended"
+    landed = {t: exact_rows(cat, t) for t in tables}
+    assert landed["triples_raw"]
+    # straight replay of the same batch: skipped, no rows added
+    assert process_micro_batch(cat, cfg, "transcripts", b0, 0) == "skipped"
+    assert {t: exact_rows(cat, t) for t in tables} == landed
+
+    # torn batch 1: every data write lands under ab-b1, then the run
+    # dies before its commit point
+    append = Catalog.append
+
+    def crash_at_commit(self, df, name, run_id=None):
+        if name == ckpt.STATE:
+            raise RuntimeError("crash before the commit point")
+        return append(self, df, name, run_id=run_id)
+
+    monkeypatch.setattr(Catalog, "append", crash_at_commit)
+    with pytest.raises(RuntimeError, match="commit point"):
+        process_micro_batch(cat, cfg, "transcripts", b1, 1)
+    monkeypatch.undo()
+    assert ckpt.committed_run_ids(cat) == {"ab-b0"}
+    assert len(exact_rows(cat, "triples_raw")) > len(landed["triples_raw"])
+
+    # the retry prunes the orphans and lands batch 1 exactly once
+    assert process_micro_batch(cat, cfg, "transcripts", b1, 1) == "appended"
+    assert ckpt.committed_run_ids(cat) == {"ab-b0", "ab-b1"}
+    wh_b = str(tmp_path / "wh_b")
+    cat_b, cfg_b = Catalog(spark, wh_b), PipelineConfig(warehouse=wh_b)
+    stage_a_reassemble(cat_b, df, cfg_b)
+    stage_b_extract(cat_b, cfg_b)
+    for t in tables:
+        assert exact_rows(cat, t) == exact_rows(cat_b, t), t
 
 
 def test_stream_pipeline_ab_exactly_once(spark, corpus, tmp_path):
@@ -183,25 +170,18 @@ def test_stream_pipeline_ab_exactly_once(spark, corpus, tmp_path):
 
     cat_s = Catalog(spark, str(tmp_path / "wh_stream"))
     cat_b = Catalog(spark, str(tmp_path / "wh_batch"))
+    cfg_s = PipelineConfig(warehouse=str(tmp_path / "wh_stream"))
 
     stream_pipeline_to_catalog(
-        spark, src, cat_s, checkpoint_path=str(tmp_path / "ck1")
+        spark, src, cfg_s, checkpoint_path=str(tmp_path / "ck1")
     )
 
     cfg_b = PipelineConfig(warehouse=str(tmp_path / "wh_batch"))
     stage_a_reassemble(cat_b, spark.read.parquet(src), cfg_b)
     stage_b_extract(cat_b, cfg_b)
 
-    def rows(cat, table, drop=()):
-        dfr = cat.read(table).drop(*drop)
-        cols = sorted(dfr.columns)
-        # key=repr: tolerate None and array-valued columns in the sort
-        return sorted(
-            (tuple(r[c] for c in cols) for r in dfr.collect()), key=repr
-        )
-
     for t in ["documents", "triples_raw", "nodes_raw", "edges_agg"]:
-        assert rows(cat_s, t) == rows(cat_b, t), t
+        assert exact_rows(cat_s, t) == exact_rows(cat_b, t), t
     n_docs = cat_s.read("documents").count()
     n_triples = cat_s.read("triples_raw").count()
     assert n_triples > 0
@@ -209,11 +189,11 @@ def test_stream_pipeline_ab_exactly_once(spark, corpus, tmp_path):
     # full replay (fresh streaming checkpoint → ALL offsets re-fire):
     # every batch's run_id is committed, so everything is skipped
     stream_pipeline_to_catalog(
-        spark, src, cat_s, checkpoint_path=str(tmp_path / "ck2")
+        spark, src, cfg_s, checkpoint_path=str(tmp_path / "ck2")
     )
     assert cat_s.read("documents").count() == n_docs
     assert cat_s.read("triples_raw").count() == n_triples
-    assert rows(cat_s, "edges_agg") == rows(cat_b, "edges_agg")
+    assert exact_rows(cat_s, "edges_agg") == exact_rows(cat_b, "edges_agg")
 
     # torn stream batch: orphan triples append + orphan edges_agg merge
     # version whose run_id never reached the state table
@@ -233,12 +213,11 @@ def test_stream_pipeline_ab_exactly_once(spark, corpus, tmp_path):
 
     # batch takeover on the stream's warehouse: resume reconcile prunes
     # the orphans, pending sets are empty (stream marked A/B processed)
-    cfg_s = PipelineConfig(warehouse=str(tmp_path / "wh_stream"))
     stage_a_reassemble(cat_s, spark.read.parquet(src), cfg_s)
     stage_b_extract(cat_s, cfg_s)
     assert cat_s.read("documents").count() == n_docs
     assert cat_s.read("triples_raw").count() == n_triples
-    assert rows(cat_s, "edges_agg") == rows(cat_b, "edges_agg")
+    assert exact_rows(cat_s, "edges_agg") == exact_rows(cat_b, "edges_agg")
 
 
 def test_stream_pipeline_ab_multibatch(spark, corpus, tmp_path):
@@ -246,8 +225,6 @@ def test_stream_pipeline_ab_multibatch(spark, corpus, tmp_path):
     its own micro-batch (own run_id, own atomic commit). The final
     warehouse equals the batch pipeline's regardless of batch count,
     and a full offset replay of EVERY batch changes nothing."""
-    import pyspark.sql.functions as F
-
     from aisafetyintervention_literatureextraction_spark.catalog import Catalog
     from aisafetyintervention_literatureextraction_spark import checkpoint as ckpt
     from aisafetyintervention_literatureextraction_spark.plans.pipeline import (
@@ -255,7 +232,6 @@ def test_stream_pipeline_ab_multibatch(spark, corpus, tmp_path):
         stage_a_reassemble,
         stage_b_extract,
     )
-    from aisafetyintervention_literatureextraction_spark.schemas import TRANSCRIPTS
     from aisafetyintervention_literatureextraction_spark.streaming.catalog_sink import (
         stream_pipeline_to_catalog,
     )
@@ -267,54 +243,31 @@ def test_stream_pipeline_ab_multibatch(spark, corpus, tmp_path):
     df.repartition(4, "conv_id").write.parquet(src)
 
     cat_s = Catalog(spark, str(tmp_path / "wh_s"))
+    cfg_s = PipelineConfig(warehouse=str(tmp_path / "wh_s"))
 
     def run(ck):
-        from pyspark.sql import DataFrame
-        src_df = (
-            spark.readStream.schema(TRANSCRIPTS)
-            .option("maxFilesPerTrigger", 1).parquet(src)
-        )
-        # reuse the sink's process fn via the public API — but with the
-        # per-file trigger we must build the stream here
-        from aisafetyintervention_literatureextraction_spark.streaming import (
-            catalog_sink as cs,
-        )
-        held = []
+        return stream_pipeline_to_catalog(
+            spark, src, cfg_s, checkpoint_path=ck, max_files_per_trigger=1,
+        )["n_batches"]
 
-        def process(batch_df: DataFrame, batch_id: int) -> None:
-            held.append(batch_id)
-            cs._process_ab_batch(spark, cat_s, batch_df, batch_id, "mb")
-
-        q = (
-            src_df.writeStream.foreachBatch(process)
-            .option("checkpointLocation", ck).trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-        return held
-
-    batches = run(str(tmp_path / "ck1"))
-    assert len(batches) >= 3  # genuinely multi-batch
-    run_ids = {r for r in ckpt.committed_run_ids(cat_s) if r.startswith("mb-")}
-    assert len(run_ids) == len(batches)  # one atomic commit per batch
+    n_batches = run(str(tmp_path / "ck1"))
+    assert n_batches >= 3  # genuinely multi-batch
+    run_ids = {r for r in ckpt.committed_run_ids(cat_s) if r.startswith("ab-")}
+    assert len(run_ids) == n_batches  # one atomic commit per batch
 
     cat_b = Catalog(spark, str(tmp_path / "wh_b"))
     cfg_b = PipelineConfig(warehouse=str(tmp_path / "wh_b"))
     stage_a_reassemble(cat_b, spark.read.parquet(src), cfg_b)
     stage_b_extract(cat_b, cfg_b)
 
-    def rows(cat, table):
-        dfr = cat.read(table)
-        cols = sorted(dfr.columns)
-        return sorted((tuple(r[c] for c in cols) for r in dfr.collect()), key=repr)
-
     for t in ["documents", "triples_raw", "nodes_raw", "edges_agg"]:
-        assert rows(cat_s, t) == rows(cat_b, t), t
+        assert exact_rows(cat_s, t) == exact_rows(cat_b, t), t
 
     # replay every batch (fresh checkpoint): all skipped, nothing changes
     n_docs = cat_s.read("documents").count()
     run(str(tmp_path / "ck2"))
     assert cat_s.read("documents").count() == n_docs
-    assert rows(cat_s, "edges_agg") == rows(cat_b, "edges_agg")
+    assert exact_rows(cat_s, "edges_agg") == exact_rows(cat_b, "edges_agg")
 
 
 def test_run_pipeline_streaming_equals_batch(spark, corpus, tmp_path,
@@ -350,13 +303,7 @@ def test_run_pipeline_streaming_equals_batch(spark, corpus, tmp_path,
 
     cat_s, cat_b = Catalog(spark, str(tmp_path / "wh_s")), Catalog(spark, str(tmp_path / "wh_b"))
     for t in ["kg_nodes", "kg_edges"]:
-        a = cat_s.read(t)
-        cols = sorted(a.columns)
-        sa = sorted((tuple(r[c] for c in cols) for r in a.collect()), key=repr)
-        sb = sorted(
-            (tuple(r[c] for c in cols) for r in cat_b.read(t).collect()), key=repr
-        )
-        assert sa == sb, t
+        assert exact_rows(cat_s, t) == exact_rows(cat_b, t), t
 
 
 def test_stream_pipeline_cd_in_stream(spark, corpus, tmp_path):
@@ -384,8 +331,8 @@ def test_stream_pipeline_cd_in_stream(spark, corpus, tmp_path):
     cat_s = Catalog(spark, wh_s)
     cfg_s = PipelineConfig(warehouse=wh_s)
     state = stream_pipeline_to_catalog(
-        spark, src, cat_s, checkpoint_path=str(tmp_path / "ck1"),
-        cd_every=2, cd_cfg=cfg_s, max_files_per_trigger=1,
+        spark, src, cfg_s, checkpoint_path=str(tmp_path / "ck1"),
+        cd_every=2, max_files_per_trigger=1,
     )
     assert state["n_batches"] >= 3          # genuinely multi-batch
     assert state["cd_on_last"]              # kg tables are stream-built
@@ -395,15 +342,8 @@ def test_stream_pipeline_cd_in_stream(spark, corpus, tmp_path):
     stats_b = run_pipeline(spark, spark.read.parquet(src), str(tmp_path / "wh_b"))
     cat_b = Catalog(spark, str(tmp_path / "wh_b"))
 
-    def rows(cat, table):
-        dfr = cat.read(table)
-        cols = sorted(dfr.columns)
-        return sorted(
-            (tuple(r[c] for c in cols) for r in dfr.collect()), key=repr
-        )
-
     for t in ["kg_nodes", "kg_edges", "dangling", "components"]:
-        assert rows(cat_s, t) == rows(cat_b, t), t
+        assert exact_rows(cat_s, t) == exact_rows(cat_b, t), t
 
     # full offset replay (fresh checkpoint): every A+B batch is a
     # committed no-op, C sees an empty pending delta, D recomputes the
@@ -411,12 +351,12 @@ def test_stream_pipeline_cd_in_stream(spark, corpus, tmp_path):
     n_edges = cat_s.read("kg_edges").count()
     n_triples = cat_s.read("triples_raw").count()
     stream_pipeline_to_catalog(
-        spark, src, cat_s, checkpoint_path=str(tmp_path / "ck2"),
-        cd_every=2, cd_cfg=cfg_s, max_files_per_trigger=1,
+        spark, src, cfg_s, checkpoint_path=str(tmp_path / "ck2"),
+        cd_every=2, max_files_per_trigger=1,
     )
     assert cat_s.read("triples_raw").count() == n_triples
     assert cat_s.read("kg_edges").count() == n_edges
-    assert rows(cat_s, "kg_edges") == rows(cat_b, "kg_edges")
+    assert exact_rows(cat_s, "kg_edges") == exact_rows(cat_b, "kg_edges")
 
 
 def test_stream_pdf_pipeline_cd_in_stream(spark, tmp_path):
@@ -435,7 +375,7 @@ def test_stream_pdf_pipeline_cd_in_stream(spark, tmp_path):
         run_pipeline,
     )
     from aisafetyintervention_literatureextraction_spark.streaming.catalog_sink import (
-        stream_pdf_pipeline_to_catalog,
+        stream_pipeline_to_catalog,
     )
 
     d = ensure_pdf_fixture(str(tmp_path / "pdfs"), grammar=True)
@@ -444,9 +384,9 @@ def test_stream_pdf_pipeline_cd_in_stream(spark, tmp_path):
     wh_s = str(tmp_path / "wh_s")
     cat_s = Catalog(spark, wh_s)
     cfg_s = PipelineConfig(warehouse=wh_s)
-    state = stream_pdf_pipeline_to_catalog(
-        spark, d, cat_s, checkpoint_path=str(tmp_path / "ck1"),
-        cd_every=2, cd_cfg=cfg_s, max_files_per_trigger=4,
+    state = stream_pipeline_to_catalog(
+        spark, d, cfg_s, fmt="pdf", checkpoint_path=str(tmp_path / "ck1"),
+        glob="*.pdf", cd_every=2, max_files_per_trigger=4,
     )
     assert state["n_batches"] >= 3          # genuinely multi-batch
     assert state["cd_on_last"] or cat_s.read("kg_edges").count() > 0
@@ -457,15 +397,8 @@ def test_stream_pdf_pipeline_cd_in_stream(spark, tmp_path):
     cat_b = Catalog(spark, str(tmp_path / "wh_b"))
     assert stats_b["n_triples"] == cat_s.read("triples_raw").count()
 
-    def rows(cat, table):
-        dfr = cat.read(table)
-        cols = sorted(dfr.columns)
-        return sorted(
-            (tuple(repr(r[c]) for c in cols) for r in dfr.collect()), key=repr
-        )
-
     for t in ["documents", "kg_nodes", "kg_edges", "dangling", "components"]:
-        assert rows(cat_s, t) == rows(cat_b, t), t
+        assert exact_rows(cat_s, t) == exact_rows(cat_b, t), t
     # provenance reached the stream-built graph
     titles = {t for r in cat_s.read("kg_nodes").collect()
               for t in r.source_titles}
@@ -473,12 +406,12 @@ def test_stream_pdf_pipeline_cd_in_stream(spark, tmp_path):
 
     # full offset replay: committed no-ops, identical warehouse
     n_triples = cat_s.read("triples_raw").count()
-    stream_pdf_pipeline_to_catalog(
-        spark, d, cat_s, checkpoint_path=str(tmp_path / "ck2"),
-        cd_every=2, cd_cfg=cfg_s, max_files_per_trigger=4,
+    stream_pipeline_to_catalog(
+        spark, d, cfg_s, fmt="pdf", checkpoint_path=str(tmp_path / "ck2"),
+        glob="*.pdf", cd_every=2, max_files_per_trigger=4,
     )
     assert cat_s.read("triples_raw").count() == n_triples
-    assert rows(cat_s, "kg_edges") == rows(cat_b, "kg_edges")
+    assert exact_rows(cat_s, "kg_edges") == exact_rows(cat_b, "kg_edges")
 
 
 # table_digest of the batch ARD warehouse built below (12 grammar
@@ -512,7 +445,7 @@ def test_ard_pipeline_batch_and_stream(spark, tmp_path):
         run_pipeline,
     )
     from aisafetyintervention_literatureextraction_spark.streaming.catalog_sink import (
-        stream_ard_pipeline_to_catalog,
+        stream_pipeline_to_catalog,
     )
 
     n_docs = 12
@@ -564,9 +497,9 @@ def test_ard_pipeline_batch_and_stream(spark, tmp_path):
     wh_s = str(tmp_path / "wh_s")
     cat_s = Catalog(spark, wh_s)
     cfg_s = PipelineConfig(warehouse=wh_s)
-    state = stream_ard_pipeline_to_catalog(
-        spark, str(src), cat_s, checkpoint_path=str(tmp_path / "ck1"),
-        cd_every=2, cd_cfg=cfg_s, max_files_per_trigger=2,
+    state = stream_pipeline_to_catalog(
+        spark, str(src), cfg_s, fmt="ard", checkpoint_path=str(tmp_path / "ck1"),
+        cd_every=2, max_files_per_trigger=2,
     )
     assert state["n_batches"] >= 2
     from aisafetyintervention_literatureextraction_spark.plans.pipeline import (
@@ -577,18 +510,11 @@ def test_ard_pipeline_batch_and_stream(spark, tmp_path):
         stage_c_canonicalize(cat_s, cfg_s)
         stage_d_materialize(cat_s, cfg_s)
 
-    def rows(cat, table):
-        dfr = cat.read(table)
-        cols = sorted(dfr.columns)
-        return sorted(
-            (tuple(repr(r[c]) for c in cols) for r in dfr.collect()), key=repr
-        )
-
     for t in ["documents", "quarantine", "kg_nodes", "kg_edges"]:
-        assert rows(cat_s, t) == rows(cat_b, t), t
+        assert exact_rows(cat_s, t) == exact_rows(cat_b, t), t
     n_triples = cat_s.read("triples_raw").count()
-    stream_ard_pipeline_to_catalog(
-        spark, str(src), cat_s, checkpoint_path=str(tmp_path / "ck2"),
-        cd_every=2, cd_cfg=cfg_s, max_files_per_trigger=2,
+    stream_pipeline_to_catalog(
+        spark, str(src), cfg_s, fmt="ard", checkpoint_path=str(tmp_path / "ck2"),
+        cd_every=2, max_files_per_trigger=2,
     )
     assert cat_s.read("triples_raw").count() == n_triples
