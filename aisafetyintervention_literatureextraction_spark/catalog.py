@@ -28,6 +28,9 @@ files and (b) write a new manifest + flip the pointer — so:
   multi-table pipeline commit can be healed at the *manifest* level:
   ``prune_orphan_runs`` drops entries from runs whose checkpoint-state
   commit never landed — O(manifest), never O(data).
+- entries record their row count (``n_rows``, read from the written
+  files' parquet footers), so ``count`` and the file-level
+  ``entry_files`` answer from the manifest without a Spark job.
 
 Maintenance (Iceberg leaves this to table services, so do we):
 ``compact`` rewrites the live snapshot into one data dir when the
@@ -44,11 +47,29 @@ import time
 import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, LongType, StringType, StructType
 
 _BUCKET_COL = "__bucket"
+# Spark → parquet types of the driver-side row writes (``append_rows``)
+_ARROW_TYPES = {StringType(): pa.string(), IntegerType(): pa.int32(),
+                LongType(): pa.int64()}
+
+
+def parquet_files(path: str) -> list[str]:
+    """The data files of one entry dir, in name order."""
+    if not os.path.isdir(path):
+        return []
+    return sorted(os.path.join(path, f) for f in os.listdir(path)
+                  if f.endswith(".parquet"))
+
+
+def _n_rows(path: str) -> int:
+    """Rows under an entry dir, summed from its files' parquet footers."""
+    return sum(pq.read_metadata(f).num_rows for f in parquet_files(path))
 
 
 def bucket_expr(keys: list[str], n_buckets: int) -> F.Column:
@@ -59,10 +80,10 @@ def bucket_expr(keys: list[str], n_buckets: int) -> F.Column:
 
 
 def lww_combiner(keys: list[str], cols: list[str], order_col: str | None):
-    """The last-writer-wins merge fold shared by BOTH backends
-    (manifest and Iceberg): reduce rows sharing ``keys`` to the single
-    row with max ``(__gen, order_col)`` — update rows carry
-    ``__gen=1`` so they beat base rows even on order ties, base rows
+    """The last-writer-wins merge fold of ``merge_upsert``: reduce
+    rows sharing ``keys`` to the single row with max
+    ``(__gen, order_col)`` — update rows carry ``__gen=1`` so they
+    beat base rows even on order ties, base rows
     coalesce to ``__gen=0`` via the allowMissingColumns union. A
     semigroup fold (idempotent on already-combined rows), as
     ``merge_combine`` requires. ``cols`` is the update frame's column
@@ -211,10 +232,12 @@ class Catalog:
                             "path": os.path.join(rel, d),
                             "bucket": int(d.split("=", 1)[1]),
                             "run_id": run_id,
+                            "n_rows": _n_rows(os.path.join(path, d)),
                         })
             return entries
         df.write.mode("overwrite").parquet(path)
-        return [{"path": rel, "bucket": None, "run_id": run_id}]
+        return [{"path": rel, "bucket": None, "run_id": run_id,
+                 "n_rows": _n_rows(path)}]
 
     @staticmethod
     def _permissive(dt):
@@ -280,6 +303,36 @@ class Catalog:
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(*paths)
 
+    def count(self, name: str) -> int:
+        """``read(name).count()`` from the manifest's per-entry row
+        counts: no Spark job (a job only for entries written before the
+        manifest kept them)."""
+        entries = self._manifest(name)["entries"]
+        if all("n_rows" in e for e in entries):
+            return sum(e["n_rows"] for e in entries)
+        return self.read(name).count()
+
+    def run_ids(self, name: str) -> set[str] | None:
+        """The run_ids whose rows the live table holds: its entries'
+        ``run_id`` tags, plus the ``runs`` a ``compact`` folded into its
+        rewritten entries. None when an entry holds rows of unknown
+        runs (written without a run_id, or compacted from such)."""
+        runs: set[str] = set()
+        for e in self._manifest(name)["entries"]:
+            if e.get("run_id") is None and "runs" not in e:
+                return None
+            runs.update(e.get("runs", ()))
+            if e.get("run_id") is not None:
+                runs.add(e["run_id"])
+        return runs
+
+    def entry_files(self, name: str, run_id: str) -> list[str]:
+        """The data files the live entries tagged ``run_id`` hold, in
+        entry then name order."""
+        return [f for e in self._manifest(name)["entries"]
+                if e.get("run_id") == run_id
+                for f in parquet_files(os.path.join(self._table_dir(name), e["path"]))]
+
     def read_or_empty(self, name: str, schema) -> DataFrame:
         if self.exists(name):
             return self.read(name)
@@ -301,8 +354,33 @@ class Catalog:
             return self.overwrite(df, name, run_id=run_id)
         m = self._manifest(name)
         bucketing = m.get("bucketing")
-        schema = self._merge_schema(StructType.fromJson(m["schema"]), df.schema)
         new_entries = self._write_data(df, name, run_id, bucketing)
+        return self._commit_append(name, m, df.schema, new_entries)
+
+    def append_rows(self, rows: list[tuple], schema: StructType, name: str,
+                    run_id: str | None = None) -> int:
+        """``append`` of a few rows held on the driver (run records,
+        metrics): one parquet file written with pyarrow, so the commit
+        runs no Spark job. Unbucketed tables only."""
+        m = self._manifest(name) if self.exists(name) else None
+        if m is not None and m.get("bucketing"):
+            raise ValueError(f"append_rows: {name} is bucketed")
+        rel = os.path.join("data", f"c-{uuid.uuid4().hex[:12]}")
+        path = os.path.join(self._table_dir(name), rel)
+        os.makedirs(path)
+        arrow = pa.schema([(f.name, _ARROW_TYPES[f.dataType]) for f in schema.fields])
+        pq.write_table(
+            pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=arrow),
+            os.path.join(path, "part-00000.parquet"))
+        entries = [{"path": rel, "bucket": None, "run_id": run_id, "n_rows": len(rows)}]
+        if m is None:
+            return self._commit_manifest(name, entries, schema, None, run_id=run_id)
+        return self._commit_append(name, m, schema, entries)
+
+    def _commit_append(self, name: str, m: dict, schema: StructType,
+                       new_entries: list[dict]) -> int:
+        bucketing = m.get("bucketing")
+        schema = self._merge_schema(StructType.fromJson(m["schema"]), schema)
         if bucketing:
             # rows appended to a merge-keyed table are an UNCOMBINED raw
             # log: they may duplicate existing keys, and the next
@@ -484,10 +562,15 @@ class Catalog:
         """Rewrite the live snapshot into one data dir (amortized table
         maintenance — the LSM/Iceberg rewrite_data_files analog). Old
         versions stay readable until vacuum."""
+        runs = self.run_ids(name)
         m = self._manifest(name)
         df = self.read(name)
         bucketing = m.get("bucketing")
         entries = self._write_data(df, name, run_id, bucketing)
+        if runs is not None:
+            # the rewritten entries keep the record of whose rows they hold
+            for e in entries:
+                e["runs"] = sorted(runs)
         if bucketing and not all(e.get("combined", True) for e in m["entries"]):
             # a file-level rewrite must not forget that appended rows
             # still await key-collapse by the next merge; per-bucket

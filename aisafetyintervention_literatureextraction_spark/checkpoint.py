@@ -7,12 +7,20 @@ Ours is the same primitive, set-oriented and per-stage:
 - ``_ckpt_stage_state``: one row per (stage, conv_id) processed.
   Resume = ``input.join(state, "conv_id", "left_anti")`` — Catalyst
   pushes the anti-join below the expensive stages, so a killed run
-  recomputes nothing (north_star requirement).
-- ``_ckpt_lineage``: per-partition rows (conv_id min/max, row count)
-  written from the executors via ``mapInPandas`` observation — the
-  "per-partition lineage (conv_id ranges, stage watermarks)" the
-  north rule names.
+  recomputes nothing (north_star requirement). Every commit tags its
+  manifest entry with its run_id, so the committed-run set is read
+  from the manifest (``Catalog.run_ids``), never from the rows.
+- ``_ckpt_lineage``: one row per data FILE a stage run committed to
+  its output table: ``partition_id`` is the file's index within the
+  run's commit, ``n_rows`` its row count and ``conv_id_min`` /
+  ``conv_id_max`` the key range, all read from the file's parquet
+  footer — the "per-partition lineage (conv_id ranges, stage
+  watermarks)" the north rule names, at the granularity the commit
+  wrote (one file per write task).
 - ``_ckpt_metrics``: one row per (stage, run_id, metric).
+
+Commit-point sentinels, lineage and metrics rows are written on the
+driver (``Catalog.append_rows``): bookkeeping submits no Spark job.
 """
 
 from __future__ import annotations
@@ -20,11 +28,12 @@ from __future__ import annotations
 import time
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .catalog import Catalog
-from .schemas import CKPT_METRICS
+from .schemas import CKPT_LINEAGE, CKPT_METRICS, CKPT_STAGE_STATE
 
 STATE = "_ckpt_stage_state"
 LINEAGE = "_ckpt_lineage"
@@ -84,20 +93,32 @@ def state_rows(
 
 
 def mark_processed(
-    catalog: Catalog, stage: str, run_id: str, conv_ids: DataFrame, key: str = "conv_id"
+    catalog: Catalog, stage: str, run_id: str, conv_ids: DataFrame | None = None,
+    key: str = "conv_id",
 ) -> None:
     """The COMMIT POINT of a stage run: a run's output-table entries
-    are considered committed iff its run_id appears in the state table
+    are considered committed iff its run_id tags a state-table entry
     (see ``reconcile``) — so this must be the LAST catalog write of
-    the stage's exactly-once window."""
-    catalog.append(state_rows(stage, run_id, conv_ids, key), STATE)
+    the stage's exactly-once window. ``conv_ids`` None marks the whole
+    stage with one ``__all__`` sentinel row (the pure-recompute stages
+    D, E and compaction), written without a Spark job."""
+    if conv_ids is None:
+        catalog.append_rows([(stage, "__all__", run_id)], CKPT_STAGE_STATE,
+                            STATE, run_id=run_id)
+    else:
+        catalog.append(state_rows(stage, run_id, conv_ids, key), STATE, run_id=run_id)
 
 
 def committed_run_ids(catalog: Catalog) -> set[str]:
-    """run_ids whose stage reached its mark_processed commit point."""
+    """run_ids whose stage reached its mark_processed commit point:
+    the state manifest's run record, no Spark job. A state table
+    written before its entries carried run_ids is scanned instead."""
     if not catalog.exists(STATE):
         return set()
-    return {r[0] for r in catalog.read(STATE).select("run_id").distinct().collect()}
+    runs = catalog.run_ids(STATE)
+    if runs is None:
+        runs = {r[0] for r in catalog.read(STATE).select("run_id").distinct().collect()}
+    return runs
 
 
 def reconcile_versions(
@@ -132,34 +153,33 @@ def reconcile(
 
 
 def write_lineage(
-    catalog: Catalog, stage: str, run_id: str, df: DataFrame, key: str = "conv_id"
+    catalog: Catalog, stage: str, run_id: str, table: str, key: str = "conv_id"
 ) -> None:
-    """Per-partition lineage: conv_id range + row count per shuffle
-    partition of the stage output (computed distributed, not collected
-    row-wise)."""
-    lin = (
-        df.withColumn("partition_id", F.spark_partition_id())
-        .groupBy("partition_id")
-        .agg(
-            F.min(F.col(key).cast("string")).alias("conv_id_min"),
-            F.max(F.col(key).cast("string")).alias("conv_id_max"),
-            F.count("*").alias("n_rows"),
-        )
-        .select(
-            F.lit(stage).alias("stage"),
-            F.lit(run_id).alias("run_id"),
-            F.col("partition_id").cast("int"),
-            "conv_id_min", "conv_id_max", "n_rows",
-        )
-    )
-    catalog.append(lin, LINEAGE)
+    """Per-file lineage of the entries ``run_id`` committed to
+    ``table``: row count and ``key`` (a string column) range of every
+    non-empty data file, from the parquet footers — no Spark job and
+    no recompute of the stage output."""
+    rows = []
+    for path in catalog.entry_files(table, run_id):
+        meta = pq.read_metadata(path)
+        if not meta.num_rows:
+            continue
+        col = meta.schema.names.index(key)
+        stats = [meta.row_group(g).column(col).statistics
+                 for g in range(meta.num_row_groups)]
+        stats = [st for st in stats if st is not None and st.has_min_max]
+        rows.append((
+            stage, run_id, len(rows),
+            min((st.min for st in stats), default=None),
+            max((st.max for st in stats), default=None),
+            meta.num_rows,
+        ))
+    catalog.append_rows(rows, CKPT_LINEAGE, LINEAGE)
 
 
 def write_metrics(catalog: Catalog, stage: str, run_id: str, metrics: dict) -> None:
-    spark = catalog.spark
-    rows = [
-        {"stage": stage, "run_id": run_id, "metric": k, "value": str(v)}
-        for k, v in {**metrics, "wall_ts": time.time()}.items()
-    ]
-    df = spark.createDataFrame(rows, schema=CKPT_METRICS)
-    catalog.append(df, METRICS)
+    """One ``_ckpt_metrics`` row per metric (plus ``wall_ts``), written
+    on the driver."""
+    rows = [(stage, run_id, k, str(v))
+            for k, v in {**metrics, "wall_ts": time.time()}.items()]
+    catalog.append_rows(rows, CKPT_METRICS, METRICS)

@@ -14,12 +14,12 @@ Algorithm: min-label propagation with POINTER JUMPING to fixpoint —
 The jump step halves chain depth every iteration (path-doubling), so a
 diameter-D chain converges in O(log D) iterations instead of O(D) —
 the property that makes long near-dup chains safe at corpus scale
-(ADVICE r1: plain propagation silently hit max_iter on them). Each
-iteration is two shuffles; lineage is truncated per iteration with
-``localCheckpoint`` so the plan does not grow unboundedly (SURVEY.md
-§4.2); convergence = zero changed labels (an aggregate, not a collect
-of the data). Non-convergence within ``max_iter`` raises instead of
-silently returning wrong labels.
+(ADVICE r1: plain propagation silently hit max_iter on them). The
+rounds run on the graph kernels' shared loop
+(``graph_analytics.iterate``): each pins its labels with ONE job, and
+the number of changed labels rides that job as an Observation, so
+convergence costs no extra action. Non-convergence within ``max_iter``
+raises instead of silently returning wrong labels.
 """
 
 from __future__ import annotations
@@ -27,29 +27,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.caching import track
+from .graph_analytics import _coalesced_kernel, iterate
 
+
+@_coalesced_kernel
 def connected_components(
     vertices: DataFrame,  # node_id long
     edges: DataFrame,     # a_id, b_id
-    max_iter: int = 50,
-    checkpoint_every: int = 1,
-    initial_labels: DataFrame | None = None,
-) -> DataFrame:
-    # r6: the hop/jump rounds are linear joins over the label relation
-    # — the same tiny-per-round-shuffle profile as the rank kernels,
-    # so run the eager iteration under AQE partition coalescing (see
-    # graph_analytics._adaptive_coalesce: byte-adaptive, restores the
-    # caller's setting on exit)
-    from .graph_analytics import _adaptive_coalesce
-
-    with _adaptive_coalesce(edges):
-        return _connected_components_impl(
-            vertices, edges, max_iter, checkpoint_every, initial_labels)
-
-
-def _connected_components_impl(
-    vertices: DataFrame,
-    edges: DataFrame,
     max_iter: int = 50,
     checkpoint_every: int = 1,
     initial_labels: DataFrame | None = None,
@@ -63,12 +48,21 @@ def _connected_components_impl(
     id of SOME subset of the node's true component, which holds for a
     previous run's output because similarity edges are only ever
     ADDED (components merge, never split). An incremental run then
-    converges in one or two iterations instead of O(log diameter)."""
-    sym = (
+    converges in one or two iterations instead of O(log diameter).
+
+    ``checkpoint_every`` is the pin cadence: rounds between pins ride
+    lazily into the next pin's job, and convergence is checked at pins.
+
+    The hop/jump rounds are linear joins over the label relation, the
+    tiny-per-round-shuffle profile of the rank kernels, so the static
+    relations are planned under AQE partition coalescing (r6,
+    ``_coalesced_kernel``) and each round is one pin job."""
+    # both are lazily persisted: the first round's pin job materializes
+    # them, and every later round reads the cache
+    sym = track(
         edges.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
         .union(edges.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     if initial_labels is not None:
         labels = vertices.join(
@@ -77,14 +71,15 @@ def _connected_components_impl(
         ).select(
             "node_id",
             F.coalesce(F.col("prev_comp"), F.col("node_id")).alias("component_id"),
-        ).localCheckpoint(eager=True)
+        )
     else:
         labels = vertices.select(
             F.col("node_id"), F.col("node_id").alias("component_id")
-        ).localCheckpoint(eager=True)
+        )
+    labels = track(labels)
 
-    converged = False
-    for i in range(max_iter):
+    def round_(labels: DataFrame, i: int) -> DataFrame:
+        labels = labels.select("node_id", "component_id")
         # hop: every edge forwards the source's current label
         msgs = (
             sym.join(labels, sym.src == labels.node_id)
@@ -117,7 +112,7 @@ def _connected_components_impl(
                 ).alias("component_id"),
             )
         )
-        new_labels = (
+        return (
             jumped.join(
                 labels.select("node_id", F.col("component_id").alias("prev")), "node_id"
             )
@@ -126,32 +121,16 @@ def _connected_components_impl(
                 (F.col("component_id") != F.col("prev")).alias("changed"),
             )
         )
-        if (i + 1) % checkpoint_every == 0:
-            # persist-then-checkpoint sandwich — NOT just lineage hygiene.
-            # localCheckpoint preserves the origin plan's Catalyst
-            # statistics, and sizeInBytes MULTIPLIES through each
-            # iteration's joins, so the estimate's BigInteger doubles
-            # in digit count every iteration; by ~iteration 12 the
-            # driver spends tens of seconds per iteration inside
-            # BigInteger.multiply doing stat propagation (measured:
-            # 0.6 s → 67 s/iter on a 20 k-node chain, executor time
-            # ~0). The cache boundary makes the checkpointed plan's
-            # stats the InMemoryRelation's REAL materialized size, so
-            # estimates stay flat for any iteration count.
-            cached = new_labels.persist()
-            n_changed = cached.filter(F.col("changed")).count()
-            new_labels = cached.localCheckpoint(eager=True)
-            cached.unpersist()
-        else:
-            n_changed = new_labels.filter(F.col("changed")).count()
-        labels = new_labels.drop("changed")
-        if n_changed == 0:
-            converged = True
-            break
+
+    labels, converged = iterate(
+        round_, labels, max_iter,
+        (F.count_if(F.col("changed")), lambda n_changed, _: n_changed == 0),
+        pin_every=checkpoint_every,
+    )
     if not converged:
         raise RuntimeError(
             f"connected_components did not converge within max_iter={max_iter} "
             "iterations — labels would be wrong; raise max_iter (convergence is "
             "O(log diameter) with pointer jumping)"
         )
-    return labels
+    return labels.drop("changed")

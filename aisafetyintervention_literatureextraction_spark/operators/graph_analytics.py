@@ -20,14 +20,14 @@ Scale design notes (shared by every kernel):
   bit-identical regardless of partitioning, reduce order, or engine —
   float PageRank is order-dependent under distributed summation and
   can never be oracle-checked exactly.
-- **Iteration hygiene.**  Every loop pins per-round state with
-  ``_pin`` (persist → count: ONE job per round; an eagerly-populated
-  InMemoryRelation carries its real materialized sizeInBytes, which
-  is the Catalyst-stats pin the r4 fix requires — localCheckpoint
-  alone preserves origin-plan stats whose sizeInBytes estimates
-  compound through iterative self-joins until the driver stalls in
-  BigInteger math).  Lineage truncates via localCheckpoint only at
-  loop exit and every ``_TRUNCATE_EVERY`` rounds in unbounded loops.
+- **Iteration hygiene.**  Every loop runs on ``iterate``, which pins
+  the round state with ``_pin(truncate=True)`` — ONE job: a lazy
+  localCheckpoint cuts the lineage to a plan leaf, and persisting that
+  leaf makes the job's InMemoryRelation carry its real materialized
+  sizeInBytes, the Catalyst-stats pin the r4 fix requires (origin-plan
+  estimates compound through iterative self-joins until the driver
+  stalls in BigInteger math).  A loop's convergence count rides the
+  same job as an Observation.
 - **Static structure cached once.**  Edges / out-degree contributions
   are checkpointed before the loop; per-iteration shuffles move only
   the rank/frontier relation, not the edge list's lineage.
@@ -51,7 +51,7 @@ Scale design notes (shared by every kernel):
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.caching import track
@@ -74,38 +74,19 @@ def _symmetrize(edges: DataFrame) -> DataFrame:
 WEIGHT_CAP = 10**8  # per-edge weight clamp: keeps d·rank·w < 2^63
 
 
-_TRUNCATE_EVERY = 4  # _pin lineage-truncation cadence (rounds)
-
-
 import functools
 from contextlib import contextmanager
 
 
 @contextmanager
-def _adaptive_coalesce(df: DataFrame):
-    """Enable AQE partition coalescing for a kernel's eager loop jobs
-    (r6).  ``get_spark`` sessions already coalesce; the ``bench.py``
-    and ``bench_extra.py`` legs pin it OFF because their fused
-    reassembly→extraction stage must not shrink below the core count.
-    The graph kernels have the opposite profile — dozens of tiny
-    per-round shuffles whose fixed post-shuffle partitions cost more
-    task-launch overhead than compute.  Coalescing adapts the
-    partition count to the ACTUAL shuffle bytes (advisory size), so
-    this is scale-adaptive, not a local-core-count constant: at 24M
-    edges the round relations exceed the advisory size and keep their
-    parallelism.  Scoped to kernels whose per-round stages are LINEAR
-    joins/aggregations; the wedge-join enumerations (triangle_counts,
-    link_prediction, ktruss) stay out — their fan-out is generated
-    DURING the stage, so byte-based coalescing could starve them of
-    cores.  The session conf is restored on exit; the caller's
-    returned lazy plan executes under the caller's own setting."""
+def _session_conf(df: DataFrame, key: str, value: str):
+    """Set one session conf for the block; restored on exit."""
     spark = df.sparkSession
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
     try:
         old = spark.conf.get(key)
     except Exception:
         old = None
-    spark.conf.set(key, "true")
+    spark.conf.set(key, value)
     try:
         yield
     finally:
@@ -113,6 +94,25 @@ def _adaptive_coalesce(df: DataFrame):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, old)
+
+
+def _adaptive_coalesce(df: DataFrame):
+    """Enable AQE partition coalescing for a kernel's adaptive jobs
+    (r6): its static relations and the plans it returns.  ``get_spark``
+    sessions already coalesce; the ``bench.py`` and ``bench_extra.py``
+    legs pin it OFF because their fused reassembly→extraction stage
+    must not shrink below the core count.  The graph kernels have the
+    opposite profile — tiny shuffles whose fixed post-shuffle
+    partitions cost more task-launch overhead than compute; coalescing
+    adapts the partition count to the ACTUAL shuffle bytes, so it is
+    scale-adaptive, not a local-core-count constant.  The wedge-join
+    enumerations (triangle_counts, link_prediction, ktruss) stay out —
+    their fan-out is generated DURING the stage, so byte-based
+    coalescing could starve them of cores.  ``iterate``'s round pins
+    are planned without AQE (see ``_pin``).  The session conf is
+    restored on exit; the caller's returned lazy plan executes under
+    the caller's own setting."""
+    return _session_conf(df, "spark.sql.adaptive.coalescePartitions.enabled", "true")
 
 
 def _coalesced_kernel(fn):
@@ -125,55 +125,104 @@ def _coalesced_kernel(fn):
     return wrapper
 
 
-def _pin(df: DataFrame, prev: DataFrame | None = None,
-         truncate: bool = False) -> tuple[DataFrame, int]:
-    """One-job-per-round state pinning for iterative kernels.
+def _pin(df: DataFrame, prev: DataFrame | None = None, truncate: bool = False,
+         measure: Column | None = None) -> tuple[DataFrame, int]:
+    """Materialize and cache ``df`` with ONE job (a noop write over the
+    persisted plan); returns it with ``measure``, an aggregate over its
+    rows (default: the row count) that rides the same job as an
+    Observation.  The cached InMemoryRelation carries its REAL
+    materialized sizeInBytes — the r4 Catalyst-stats pin.
 
-    The old checkpoint sandwich ran TWO materialization jobs per round
-    (the stats-pinning count + the localCheckpoint block copy), but
-    only the persist+count is needed every round: an eagerly-populated
-    InMemoryRelation carries its REAL materialized sizeInBytes, which
-    is exactly the Catalyst-stats pin the r4 fix requires.  The
-    checkpoint copy serves lineage truncation only, so it runs at
-    ``truncate=True`` rounds.  ``prev`` (the prior generation)
-    unpersists only after the new generation is materialized, since
-    its blocks feed the new one's build.
+    The pinned plan is planned WITHOUT AQE, so all of its shuffles run
+    as stages of that one job: under AQE each would first run as a
+    map-stage job of its own, and a kernel round's few tiny shuffles
+    are bound by that per-job latency, not by compute.  Broadcast
+    joins of small relations still collect their build side with a
+    job each.
 
-    TRUNCATION CADENCE IS CORRECTNESS-ADJACENT, pick it by the loop's
-    REFERENCE FAN-OUT: persist pins stats and execution but the
-    ANALYZED logical plan keeps full lineage, so if a round's plan
-    references the previous state C times, plan-tree size grows C^r —
-    at C≈15 (ktruss's triangle enumeration) round 5 is millions of
-    nodes and the driver OOMs just STRINGIFYING the plan
-    (TreeNode.generateTreeString; observed, not hypothetical).
-    Single-reference loops (pagerank/LPA/PPR: C=1, linear growth)
-    cache-chain and truncate every ``_TRUNCATE_EVERY`` rounds + at
-    exit; multi-reference loops (ktruss, kcore, SSSP's visited,
-    BFS's all-frontiers union) truncate EVERY round.  Between
-    truncations a lost partition recomputes through unpersisted
-    ancestors — local mode never does, a cluster pays only on
-    executor loss (the GraphX periodic-checkpoint trade).
+    ``truncate`` first cuts the lineage with a lazy localCheckpoint,
+    so the pinned relation is a plan leaf; the checkpoint blocks stay
+    readable after the cache is dropped (the leaf's stats are then the
+    estimate its plan had when pinned).  Without it the cached plan
+    keeps its full lineage and CacheManager matches it by result —
+    ``_pin_once``'s reuse of shared static relations needs that.  A
+    truncated plan must not end in an ordered operator (a sort-merge
+    join) whose key column a redundant alias renamed, e.g.
+    ``col("node").cast("long").alias("node")`` on a long column: the
+    non-adaptive plan's ordering then names an attribute the
+    checkpoint's output does not have, and reading the cached leaf
+    fails (NoSuchElementException in InMemoryRelation.withOutput).
 
-    For the frontier kernels (BFS/SSSP/PPR) whose rounds are small,
-    per-round fixed cost — job-launch latency + materialization — is
-    the scaling bottleneck (see BENCH/BASELINE.md, ~4 s/iteration
-    Amdahl term), so halving jobs per round attacks the dominant
-    serial term directly.
+    TRUNCATION IS CORRECTNESS-ADJACENT for loop state: the ANALYZED
+    logical plan of a cached relation keeps full lineage, so if a
+    round's plan references the previous state C times, plan-tree size
+    grows C^r — at C≈15 (ktruss's triangle enumeration) round 5 is
+    millions of nodes and the driver OOMs just STRINGIFYING the plan
+    (TreeNode.generateTreeString; observed, not hypothetical).  Loop
+    state therefore always pins truncated (``iterate``), and a
+    multi-reference state (ktruss, kcore, SSSP's and BFS's frontier
+    unions) pins every round; single-reference state (PageRank, LPA,
+    PPR) may ride lazily through rounds between pins.
 
-    Returns ``(pinned_df, row_count)`` — the count is the pinning
-    job's result, free for the loops that need it for early exit.
-    """
-    cached = track(df)  # persist + register for release_caches (r6:
-    # a long-lived caller reclaims kernel state between queries; the
-    # explicit prev-unpersist below stays the tight loop-level bound)
-    n = cached.count()
-    out = cached
-    if truncate:
-        out = cached.localCheckpoint(eager=True)
-        cached.unpersist()
+    ``prev`` (the prior generation) unpersists only after the new one
+    is materialized, since its blocks feed the new one's build."""
+    obs = Observation()
+    agg = F.count(F.lit(1)) if measure is None else measure
+    with _session_conf(df, "spark.sql.adaptive.enabled", "false"):
+        if truncate:
+            df = df.localCheckpoint(eager=False)
+        pinned = track(df)  # persist + register for release_caches
+        pinned.observe(obs, agg.alias("m")).write.format("noop").mode("overwrite").save()
     if prev is not None:
         prev.unpersist()
-    return out, n
+    return pinned, obs.get["m"]
+
+
+def iterate(step, state: DataFrame, rounds: int | None = None,
+            converged: tuple | None = None, pin_every: int = 1,
+            keep: bool = False) -> tuple[DataFrame, bool]:
+    """The loop of every iterative kernel: rounds
+    ``state = step(state, i)`` for i = 0, 1, ... up to ``rounds``
+    (None: until ``converged`` says stop).
+
+    Every ``pin_every``-th round and the last pin the new state with
+    ``_pin(truncate=True)`` — one job per pin — and unpersist the
+    state the previous pin held, unless ``keep``: states the result
+    still reads (BFS's and SSSP's frontier unions) stay cached, so
+    their plans keep the materialized sizes.  Rounds between pins ride
+    lazily into the next pin's job, which is only safe for
+    single-reference state (see ``_pin``).
+
+    ``converged`` is ``(measure, done)``: ``measure`` an aggregate
+    Column over the new state, observed by the pin job (default
+    ``count(*)`` when None), and ``done(value, prev)`` decides from it
+    and the previous pin's value (None at the first pin) whether the
+    loop stops.  Returns the final state and whether ``done`` stopped
+    the loop."""
+    measure, done = converged or (None, None)
+    if rounds is None and done is None:
+        raise ValueError("iterate needs a round cap or a convergence test")
+    pinned, prev_value = state, None
+    i = 0
+    while rounds is None or i < rounds:
+        state = step(state, i)
+        i += 1
+        if i % pin_every and i != rounds:
+            continue
+        state, value = _pin(state, prev=None if keep else pinned,
+                            truncate=True, measure=measure)
+        pinned = state
+        if done is not None and done(value, prev_value):
+            return state, True
+        prev_value = value
+    return state, False
+
+
+def _until_stable(n0: int) -> tuple:
+    """``iterate``'s convergence test for the peels: stop once a round
+    deletes nothing (or nothing is left); ``n0`` is the row count of
+    the state the loop starts from."""
+    return None, lambda n, prev: n == 0 or n == (n0 if prev is None else prev)
 
 
 def _pin_once(df: DataFrame) -> DataFrame:
@@ -352,8 +401,7 @@ def pagerank_int(
         "node", F.lit(PR_SCALE // n).cast("long").alias("rank_int")
     )
 
-    prev = None
-    for i in range(iterations):
+    def round_(ranks: DataFrame, i: int) -> DataFrame:
         contrib = (
             struct.join(ranks, struct.src == ranks.node)
             .select(
@@ -366,7 +414,7 @@ def pagerank_int(
         )
         if directed:
             # zero-fill: a directed vertex may receive no mass
-            new_ranks = (
+            return (
                 vertices.join(contrib, "node", "left")
                 .select(
                     "node",
@@ -375,31 +423,20 @@ def pagerank_int(
                      ).alias("rank_int"),
                 )
             )
-        else:
-            # undirected: sym carries both directions, so every vertex
-            # has in-degree >= 1 and contrib already covers the whole
-            # vertex set — the per-round zero-fill join is a no-op
-            # (r6: one fewer join per round, identical rows)
-            new_ranks = contrib.select(
-                "node",
-                (F.lit(teleport).cast("long") + F.col("in_mass"))
-                .alias("rank_int"),
-            )
-        # single-reference state: pin every SECOND round (and at exit)
-        # — the intermediate round rides lazily into the next pin job,
-        # halving per-round fixed cost (job launch + cache
-        # materialization; r5 VERDICT #5's frontier-batching applied
-        # to the rank kernels).  Shuffle volume is unchanged; only the
-        # job count drops.  Lineage still truncates periodically + on
-        # exit per the _pin fan-out model.
-        last = i == iterations - 1
-        if last or i % 2 == 1:
-            trunc = last or ((i + 1) % _TRUNCATE_EVERY == 0)
-            ranks, _ = _pin(new_ranks, prev=prev, truncate=trunc)
-            prev = None if trunc else ranks
-        else:
-            ranks = new_ranks
-    return ranks
+        # undirected: sym carries both directions, so every vertex
+        # has in-degree >= 1 and contrib already covers the whole
+        # vertex set — the per-round zero-fill join is a no-op
+        # (r6: one fewer join per round, identical rows)
+        return contrib.select(
+            "node",
+            (F.lit(teleport).cast("long") + F.col("in_mass"))
+            .alias("rank_int"),
+        )
+
+    # single-reference state: pin every SECOND round (and at exit) —
+    # the intermediate round rides lazily into the next pin job
+    # (r5 VERDICT #5's frontier-batching applied to the rank kernels)
+    return iterate(round_, ranks, iterations, pin_every=2)[0]
 
 
 @_coalesced_kernel
@@ -473,8 +510,8 @@ def personalized_pagerank(
     # reached-set state: only vertices with rank > 0
     ranks = seed_v.select(
         "node", F.lit(PR_SCALE // s).cast("long").alias("rank_int"))
-    prev = None
-    for i in range(iterations):
+
+    def round_(ranks: DataFrame, i: int) -> DataFrame:
         contrib = (
             struct.join(ranks, struct.src == ranks.node)
             .select(
@@ -483,7 +520,7 @@ def personalized_pagerank(
                 .alias("part"),
             )
         )
-        new_ranks = (
+        return (
             seed_v.select(
                 "node", F.lit(teleport).cast("long").alias("part"))
             .union(contrib)
@@ -491,16 +528,9 @@ def personalized_pagerank(
             .agg(F.sum("part").alias("rank_int"))
             .filter(F.col("rank_int") > 0)
         )
-        # single-reference state: pin every second round + at exit
-        # (r5 VERDICT #5 — the ~per-round fixed cost was the scaling
-        # bottleneck for the frontier kernels)
-        last = i == iterations - 1
-        if last or i % 2 == 1:
-            trunc = last or ((i + 1) % _TRUNCATE_EVERY == 0)
-            ranks, _ = _pin(new_ranks, prev=prev, truncate=trunc)
-            prev = None if trunc else ranks
-        else:
-            ranks = new_ranks
+
+    # single-reference state: pin every second round + at exit
+    ranks = iterate(round_, ranks, iterations, pin_every=2)[0]
     return (
         vertices.join(ranks, "node", "left")
         .select(
@@ -568,34 +598,37 @@ def bfs_khop(
 
     ``visited`` stays a LAZY union over the per-hop frontiers —
     materializing the union every hop (one extra job) buys nothing.
-    Each frontier truncates to a plan leaf (``_pin(truncate=True)``):
-    the union references ALL of them every hop, so cache-chaining
-    would double plan size per hop (see ``_pin`` docstring).
+    Each frontier is a truncated plan leaf (``iterate``): the union
+    references ALL of them every hop, so cache-chaining would double
+    plan size per hop (see ``_pin`` docstring).
     """
-    sym = _symmetrize(edges).localCheckpoint(eager=True)
-    seeds0 = (
+    sym = track(_symmetrize(edges))  # materialized by the first hop's pin
+    seeds0, _ = _pin(
         seeds.select(F.col("node").cast("long").alias("node"))
         .distinct()
-        .withColumn("dist", F.lit(0))
-        .localCheckpoint(eager=True)
+        .withColumn("dist", F.lit(0)),
+        truncate=True,
     )
     frontiers = [seeds0]
-    frontier = seeds0
-    for hop in range(1, max_hops + 1):
+
+    def hop(frontier: DataFrame, i: int) -> DataFrame:
+        if i:
+            frontiers.append(frontier)
         visited_nodes = frontiers[0].select("node")
         for f in frontiers[1:]:
             visited_nodes = visited_nodes.union(f.select("node"))
-        nxt = (
+        return (
             sym.join(frontier, sym.src == frontier.node)
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited_nodes, "node", "left_anti")
-            .withColumn("dist", F.lit(hop))
+            .withColumn("dist", F.lit(i + 1))
         )
-        frontier, n_new = _pin(nxt, truncate=True)
-        if n_new == 0:
-            break
-        frontiers.append(frontier)
+
+    last, _ = iterate(hop, seeds0, max_hops,
+                      (None, lambda n_new, _: n_new == 0), keep=True)
+    if last is not frontiers[-1]:  # no hop ran: the seeds are the result
+        frontiers.append(last)
     visited = frontiers[0]
     for f in frontiers[1:]:
         visited = visited.union(f)
@@ -633,9 +666,9 @@ def sssp_weighted(
     the fixpoint.  Frontier relaxation computes the same round-i
     invariant as full-edge relaxation: a node propagates exactly when
     its value improves, and older (larger) values it would re-send
-    are already dominated.  State pinned by ``_pin`` (r4 stats fix):
-    the frontier cache-chains (single-reference), ``visited``
-    truncates every round (referenced twice per round).
+    are already dominated.  Every frontier generation pins as a
+    truncated plan leaf (``iterate``, the r4 stats fix): ``visited``
+    references all of them.
     """
     if weight is None:
         e = _symmetrize(edges).withColumn("w", F.lit(1).cast("long"))
@@ -662,13 +695,10 @@ def sssp_weighted(
         .join(vertices, "node", "semi")
         .withColumn("dist", F.lit(0).cast("long"))
     )
-    # r6 loop shape (r5 VERDICT #5): ONE pin job per round instead of
-    # two.  ``visited`` is no longer its own pinned relation — it is
-    # the groupBy-min over ALL pinned frontier generations (the BFS
-    # lazy-union trick), recomputed per round from cached leaves.
-    # Each round's improved set is exactly the old two-pin version's:
-    # min-combining the frontiers equals the old visited's
-    # union+groupBy-min by associativity of MIN.
+    # ``visited`` is the groupBy-min over ALL pinned frontier
+    # generations (the BFS lazy-union trick), recomputed per round from
+    # their leaves; by associativity of MIN it equals a maintained
+    # visited relation, with no pin of its own.
     frontiers = [seeds0]
 
     def visited_now():
@@ -677,8 +707,9 @@ def sssp_weighted(
             u = u.union(f)
         return u.groupBy("node").agg(F.min("dist").alias("dist"))
 
-    frontier = seeds0
-    for r in range(max_rounds):
+    def relax(frontier: DataFrame, i: int) -> DataFrame:
+        if i:
+            frontiers.append(frontier)
         cand = (
             sym.join(frontier, sym.src == frontier.node)
             .select(
@@ -688,18 +719,15 @@ def sssp_weighted(
             .groupBy("node")
             .agg(F.min("nd").alias("nd"))
         )
-        improved = (
+        return (
             cand.join(visited_now(), "node", "left")
             .filter(F.col("dist").isNull() | (F.col("nd") < F.col("dist")))
             .select("node", F.col("nd").alias("dist"))
         )
-        # every frontier generation stays referenced by the final
-        # union, so truncate to a plan leaf (the BFS pattern: the
-        # union of cache-chained plans would nest quadratically)
-        frontier, n_improved = _pin(improved, truncate=True)
-        if n_improved == 0:
-            break
-        frontiers.append(frontier)
+
+    last, _ = iterate(relax, seeds0, max_rounds,
+                      (None, lambda n_improved, _: n_improved == 0), keep=True)
+    frontiers.append(last)
     return visited_now()
 
 
@@ -724,21 +752,20 @@ def label_propagation(
     groupBy(node, label) vote count + one max_by reduce — all
     shuffle-on-node, no window, with partial aggregation map-side.
     The vote relation is |E| rows pre-combine, same order as one
-    PageRank contribution round.  Per-round state is pinned by the
-    one-job ``_pin`` (r4 Catalyst-stats fix), lineage truncating
-    periodically + at exit (labels are single-reference state).
+    PageRank contribution round.  Labels are single-reference state:
+    ``iterate`` pins every second round and at exit (r4 Catalyst-stats
+    fix).
     """
-    # r6: sym is a lazily-persisted leaf materialized once inside the
-    # label pin job; initial labels pin with ONE job (4 static jobs →
-    # 1; guide §2.4)
+    # sym is a lazily-persisted leaf and the initial labels a lazy
+    # projection of it: the first pin job materializes both
     sym = track(_symmetrize(edges))
-    labels, _ = _pin(
+    labels = (
         sym.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
     )
-    prev = None
-    for i in range(rounds):
+
+    def round_(labels: DataFrame, i: int) -> DataFrame:
         votes = (
             sym.join(labels, sym.dst == labels.node)
             .select(F.col("src").alias("nd"), "label")
@@ -748,7 +775,7 @@ def label_propagation(
         # max over (count, -label): most frequent label, smallest on
         # ties — (-label) is unique within a node's vote rows, so the
         # struct ordering is total and max_by is deterministic
-        new_labels = (
+        return (
             votes.groupBy("nd")
             .agg(
                 F.max_by(
@@ -758,16 +785,8 @@ def label_propagation(
             )
             .select(F.col("nd").alias("node"), "label")
         )
-        # single-reference state: pin every second round + at exit
-        # (see pagerank_int — same job-count halving, same shuffles)
-        last = i == rounds - 1
-        if last or i % 2 == 1:
-            trunc = last or ((i + 1) % _TRUNCATE_EVERY == 0)
-            labels, _ = _pin(new_labels, prev=prev, truncate=trunc)
-            prev = None if trunc else labels
-        else:
-            labels = new_labels
-    return labels
+
+    return iterate(round_, labels, rounds, pin_every=2)[0]
 
 
 def summarize_graph(edges: DataFrame) -> DataFrame:
@@ -1038,41 +1057,40 @@ def ktruss(
     Per-round cost drops from a full wedge join (Σ oriented-outdeg²)
     to three semi-joins over the shrinking triangle list plus one
     explode/count — the deleted edges' neighborhoods, not the graph.
-    State pinned via ``_pin(truncate=True)`` every round (live is
-    referenced by three semi-joins, tri by two consumers).
+    Both states pin every round (live is referenced by three
+    semi-joins, tri by two consumers); a round drops the triangles of
+    the edges the previous round deleted before it peels.
     """
-    live, n_prev = _pin(_canonical_edges(edges), truncate=True)
+    live, n0 = _pin(_canonical_edges(edges), truncate=True)
     _, tri, temps = _triangles(live)
-    tri, _ = _pin(tri, truncate=True)
+    tris = [_pin(tri, truncate=True)[0]]
     for t in temps:
         t.unpersist()
-    rounds = 0
-    while n_prev > 0:
-        nxt = (
-            _support_from_triangles(live, tri)
+
+    def surviving(tri: DataFrame, live: DataFrame) -> DataFrame:
+        lv = live.select(F.col("a").alias("la"), F.col("b").alias("lb"))
+        return (
+            tri.join(lv, (F.col("x") == F.col("la"))
+                     & (F.col("y") == F.col("lb")), "semi")
+            .join(lv, (F.col("x") == F.col("la"))
+                  & (F.col("z") == F.col("lb")), "semi")
+            .join(lv, (F.col("y") == F.col("la"))
+                  & (F.col("z") == F.col("lb")), "semi")
+        )
+
+    def peel(live: DataFrame, i: int) -> DataFrame:
+        if i:  # the previous round deleted edges (else the loop stopped)
+            tris.append(_pin(surviving(tris[-1], live), prev=tris[-1],
+                             truncate=True)[0])
+        return (
+            _support_from_triangles(live, tris[-1])
             .filter(F.col("support") >= k - 2)
             .select("a", "b")
         )
-        rounds += 1
-        new_live, n_now = _pin(nxt, truncate=True)
-        deleted = n_now != n_prev
-        live = new_live
-        if deleted:
-            lv = live.select(F.col("a").alias("la"), F.col("b").alias("lb"))
-            tri, _ = _pin(
-                tri.join(lv, (F.col("x") == F.col("la"))
-                         & (F.col("y") == F.col("lb")), "semi")
-                .join(lv, (F.col("x") == F.col("la"))
-                      & (F.col("z") == F.col("lb")), "semi")
-                .join(lv, (F.col("y") == F.col("la"))
-                      & (F.col("z") == F.col("lb")), "semi"),
-                truncate=True,
-            )
-        if (not deleted) or (max_rounds is not None and rounds >= max_rounds):
-            n_prev = n_now
-            break
-        n_prev = n_now
-    return _support_from_triangles(live, tri).localCheckpoint(eager=True)
+
+    live, settled = iterate(peel, live, max_rounds, _until_stable(n0))
+    tri = tris[-1] if settled else surviving(tris[-1], live)
+    return _pin(_support_from_triangles(live, tri), truncate=True)[0]
 
 
 @_coalesced_kernel
@@ -1096,31 +1114,25 @@ def kcore(
 
     Scale shape: each round is one groupBy (degree count) + one
     semi-join (edge filter against surviving vertices) over a
-    monotonically SHRINKING edge set; state pins + truncates EVERY
-    round via ``_pin(truncate=True)`` (the live set is referenced 3x
-    per round — see the fan-out rule in ``_pin``).  Rounds needed is
-    the degeneracy-peel depth — O(log n) on real-world graphs.
+    monotonically SHRINKING edge set; ``iterate`` pins the live set
+    EVERY round (it is referenced 3x per round — see the fan-out rule
+    in ``_pin``).  Rounds needed is the degeneracy-peel depth —
+    O(log n) on real-world graphs.
     """
-    live, n_prev = _pin(_symmetrize(edges), truncate=True)
-    rounds = 0
-    while n_prev > 0:
+    live, n0 = _pin(_symmetrize(edges), truncate=True)
+
+    def peel(live: DataFrame, i: int) -> DataFrame:
         deg = live.groupBy(F.col("src").alias("node")).agg(
             F.count("*").alias("degree")
         )
         keep = deg.filter(F.col("degree") >= k).select("node")
-        nxt = (
+        return (
             live.join(keep.withColumnRenamed("node", "src"), "src", "semi")
             .join(keep.withColumnRenamed("node", "dst"), "dst", "semi")
             .select("src", "dst")
         )
-        rounds += 1
-        # live is referenced 3x per round (degree agg + two semi-join
-        # keeps): truncate every round to keep plan growth flat
-        live, n_now = _pin(nxt, truncate=True)
-        if n_now == n_prev or (max_rounds is not None and rounds >= max_rounds):
-            n_prev = n_now
-            break
-        n_prev = n_now
+
+    live, _ = iterate(peel, live, max_rounds, _until_stable(n0))
     return live.groupBy(F.col("src").alias("node")).agg(
         F.count("*").cast("long").alias("degree")
     )

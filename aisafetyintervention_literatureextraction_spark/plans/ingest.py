@@ -5,10 +5,12 @@ Variant-B ontology suggestions landed (next-step #5).
 The reference ingests per-paper JSON and upserts per row (reference
 db.py:57-66), raising on validation failure; ours routes invalid rows
 to quarantine tables instead (F9 — SURVEY §2.2), so one malformed
-paper never aborts a 100 TB batch:
+paper never aborts a 100 TB batch.  The triples and nodes land through
+stage B's own landing half (``pipeline.land_extraction``), so an
+ingest after a build reaches ``kg_edges`` on the next stage C+D run:
 
-    triples  → triples_raw      + quarantine_triples
-    nodes    → nodes_raw        + quarantine_nodes
+    triples  → triples_raw      + quarantine_triples  + edges_agg
+    nodes    → nodes_raw        + quarantine_nodes (Variant A only)
     (B only) → ontology_suggested
 
 All writes are run_id-tagged delta commits with the same
@@ -28,9 +30,8 @@ from ..sources.extraction_json import (
     read_output_json_b,
     read_paper_json_a,
     read_suggested_types,
-    validate_nodes,
-    validate_triples,
 )
+from .pipeline import _n, land_extraction
 
 INGEST_OUTPUTS = [
     "triples_raw", "nodes_raw",
@@ -54,7 +55,9 @@ def ingest_extraction_json(
     run_id = ckpt.new_run_id()
     t0 = time.time()
     if resume:
-        ckpt.reconcile(catalog, INGEST_OUTPUTS)
+        committed = ckpt.committed_run_ids(catalog)
+        ckpt.reconcile(catalog, INGEST_OUTPUTS, committed)
+        ckpt.reconcile_versions(catalog, ["edges_agg"], committed)  # merge table
 
     if variant == "a":
         nodes, triples = read_paper_json_a(spark, path)
@@ -65,26 +68,20 @@ def ingest_extraction_json(
     triples = ckpt.pending(catalog, stage, triples) if resume else triples
     nodes = ckpt.pending(catalog, stage, nodes) if resume else nodes
 
-    t_ok, t_bad = validate_triples(triples)
-    catalog.append(t_ok, "triples_raw", run_id=run_id)
-    catalog.append(t_bad, "quarantine_triples", run_id=run_id)
-    if variant == "a":
-        n_ok, n_bad = validate_nodes(nodes)
-        catalog.append(n_bad, "quarantine_nodes", run_id=run_id)
-    else:
-        n_ok = nodes
+    if variant != "a":
         suggested = read_suggested_types(spark, path)
         suggested = ckpt.pending(catalog, stage, suggested) if resume else suggested
         catalog.append(suggested, "ontology_suggested", run_id=run_id)
-    catalog.append(n_ok, "nodes_raw", run_id=run_id)
+    n_ok, n_bad = land_extraction(catalog, run_id, triples, nodes,
+                                  check_nodes=variant == "a")
 
     processed = (
         triples.select("conv_id").union(nodes.select("conv_id")).distinct()
     )
     ckpt.mark_processed(catalog, stage, run_id, processed)  # commit point
     stats = {
-        "n_triples_ok": t_ok.count(),
-        "n_triples_quarantined": t_bad.count(),
+        "n_triples_ok": _n(n_ok),
+        "n_triples_quarantined": _n(n_bad),
         "wall_s": time.time() - t0,
     }
     ckpt.write_metrics(catalog, stage, run_id, stats)

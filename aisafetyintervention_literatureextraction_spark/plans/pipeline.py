@@ -177,15 +177,45 @@ def land_documents(
     return docs, quarantine, processed, n_docs
 
 
+def land_extraction(
+    cat: Catalog, run_id: str, triples: DataFrame, nodes: DataFrame,
+    check_nodes: bool = True,
+) -> tuple[Observation, Observation]:
+    """Stage B's landing half for one batch of extracted (or ingested)
+    triples and nodes: validation routing into the four appends —
+    invalid rows quarantine instead of raising (F9) — and the
+    ``edges_agg`` merge, all under ``run_id``.  ``check_nodes=False``
+    lands the nodes unvalidated (an open ontology) with no node
+    quarantine.  Returns the valid and quarantined triple counts,
+    which fill on their appends; the caller commits."""
+    t_ok, t_bad = validate_triples(triples)
+    n_ok, n_bad = validate_nodes(nodes) if check_nodes else (nodes, None)
+    observed, n_t_ok = _counted(t_ok)
+    t_bad, n_t_bad = _counted(t_bad)
+    cat.append(observed, "triples_raw", run_id=run_id)
+    cat.append(n_ok, "nodes_raw", run_id=run_id)
+    cat.append(t_bad, "quarantine_triples", run_id=run_id)
+    if n_bad is not None:
+        cat.append(n_bad, "quarantine_nodes", run_id=run_id)
+    # maintain the per-(subj, pred, obj) evidence aggregate incrementally
+    # (bucketed semigroup merge): stage D materializes from THIS table,
+    # so the triples_raw history is append-only archive, never rescanned
+    cat.merge_combine(
+        aggregate_raw_edges(t_ok), "edges_agg",
+        keys=["subj", "pred", "obj"], combiner=edge_agg_combiner, run_id=run_id,
+    )
+    return n_t_ok, n_t_bad
+
+
 def extract_documents(
     cat: Catalog, cfg: PipelineConfig, run_id: str, docs: DataFrame,
-) -> tuple[DataFrame, Observation]:
+) -> Observation:
     """Stage B's extraction step over one documents delta (``docs``,
-    cached by the caller): the raw-input audit copy, extraction,
-    validation routing into four appends and the ``edges_agg`` merge,
-    all under ``run_id``.  Returns the valid triples and their count,
-    which fills on the triples_raw append; the caller commits, then
-    releases the extraction caches with ``caching.release_caches``."""
+    cached by the caller): the raw-input audit copy, extraction, and
+    ``land_extraction``, all under ``run_id``.  Returns the valid
+    triples' count, which fills on the triples_raw append; the caller
+    commits, then releases the extraction caches with
+    ``caching.release_caches``."""
     # K2 raw-input audit: persist the batch EXACTLY as handed to
     # extraction (reference extract.py:77-80 keeps the raw response per
     # paper for replay; ours keeps the pre-extraction document) — the
@@ -200,21 +230,7 @@ def extract_documents(
     # expensive part of this stage
     triples = caching.track(extract_triples(docs, engine=cfg.extract_engine))
     nodes = caching.track(extract_nodes(docs, engine=cfg.extract_engine))
-    t_ok, t_bad = validate_triples(triples)
-    n_ok, n_bad = validate_nodes(nodes)
-    observed, n_t_ok = _counted(t_ok)
-    cat.append(observed, "triples_raw", run_id=run_id)
-    cat.append(n_ok, "nodes_raw", run_id=run_id)
-    cat.append(t_bad, "quarantine_triples", run_id=run_id)   # F9 routed,
-    cat.append(n_bad, "quarantine_nodes", run_id=run_id)     # not raised
-    # maintain the per-(subj, pred, obj) evidence aggregate incrementally
-    # (bucketed semigroup merge): stage D materializes from THIS table,
-    # so the triples_raw history is append-only archive, never rescanned
-    cat.merge_combine(
-        aggregate_raw_edges(t_ok), "edges_agg",
-        keys=["subj", "pred", "obj"], combiner=edge_agg_combiner, run_id=run_id,
-    )
-    return t_ok, n_t_ok
+    return land_extraction(cat, run_id, triples, nodes)[0]
 
 
 def stage_a_reassemble(cat: Catalog, transcripts: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -236,7 +252,7 @@ def _stage_a(cat: Catalog, cfg: PipelineConfig, fmt: str, rows: DataFrame) -> Da
     docs, quarantine, processed, n_docs = land_documents(
         cat, run_id, *documents_delta(fmt, rows, cfg, pending))
     ckpt.mark_processed(cat, "A_reassemble", run_id, processed)  # commit point
-    ckpt.write_lineage(cat, "A_reassemble", run_id, docs)
+    ckpt.write_lineage(cat, "A_reassemble", run_id, "documents")
     ckpt.write_metrics(cat, "A_reassemble", run_id, {
         "n_documents_delta": _n(n_docs), "wall_s": time.time() - t0,
     })
@@ -257,12 +273,12 @@ def stage_b_extract(cat: Catalog, cfg: PipelineConfig) -> tuple[DataFrame, DataF
     docs = cat.read("documents")
     pending_docs = ckpt.pending(cat, "B_extract", docs) if cfg.resume else docs
     pending_docs = caching.track(pending_docs)
-    t_ok, n_t_ok = extract_documents(cat, cfg, run_id, pending_docs)
+    n_t_ok = extract_documents(cat, cfg, run_id, pending_docs)
     ckpt.mark_processed(cat, "B_extract", run_id, pending_docs.select("conv_id"))  # commit point
     # lineage/metrics describe THIS run's delta (O(delta), and the
-    # per-partition conv_id ranges of the run's output are the useful
+    # per-file conv_id ranges of the run's output are the useful
     # lineage rows anyway — the full table's ranges are their union)
-    ckpt.write_lineage(cat, "B_extract", run_id, t_ok)
+    ckpt.write_lineage(cat, "B_extract", run_id, "triples_raw")
     n_delta = _n(n_t_ok)
     ckpt.write_metrics(cat, "B_extract", run_id, {
         "n_triples_delta": n_delta, "wall_s": time.time() - t0,
@@ -359,7 +375,7 @@ def stage_c_canonicalize(cat: Catalog, cfg: PipelineConfig) -> DataFrame:
         caching.track(ckpt.pending(cat, "C_canonicalize", nodes_raw)) if prior else nodes_raw
     )
     if prior and delta_raw.limit(1).count() == 0:
-        n_signed, n_pairs = 0, None  # nothing written: pairs counted from the table
+        n_signed, n_pairs = 0, None  # nothing written: pairs from the manifest
     else:
         delta = candidate_nodes(delta_raw)
         if prior:
@@ -389,7 +405,7 @@ def stage_c_canonicalize(cat: Catalog, cfg: PipelineConfig) -> DataFrame:
         delta_raw.unpersist()
     ckpt.write_metrics(cat, "C_canonicalize", run_id, {
         "n_candidate_pairs": (
-            cat.read("node_pairs").count() if n_pairs is None else n_pairs
+            cat.count("node_pairs") if n_pairs is None else n_pairs
         ),
         "n_signatures_computed": n_signed,
         "wall_s": time.time() - t0,
@@ -417,10 +433,7 @@ def stage_c_compact(cat: Catalog, cfg: PipelineConfig) -> None:
     _, n_pairs = _canonicalize(cat, cfg, run_id, nodes, nodes, prior=False)
     # commit point: sentinel state row makes the three overwrites one
     # atomic unit for reconcile_versions
-    ckpt.mark_processed(
-        cat, "C_compact", run_id,
-        cat.spark.createDataFrame([("__all__",)], "conv_id string"),
-    )
+    ckpt.mark_processed(cat, "C_compact", run_id)
     ckpt.write_metrics(cat, "C_compact", run_id, {
         "n_candidate_pairs": n_pairs,
         "wall_s": time.time() - t0,
@@ -470,11 +483,8 @@ def stage_d_materialize(cat: Catalog, cfg: PipelineConfig):
     # commit point: stage D is a pure recompute (no per-conv pending
     # set), so the state row is a sentinel marking all three overwrites
     # as one atomic unit for reconcile_versions
-    ckpt.mark_processed(
-        cat, "D_materialize", run_id,
-        cat.spark.createDataFrame([("__all__",)], "conv_id string"),
-    )
-    ckpt.write_lineage(cat, "D_materialize", run_id, cat.read("kg_edges"), key="pred")
+    ckpt.mark_processed(cat, "D_materialize", run_id)
+    ckpt.write_lineage(cat, "D_materialize", run_id, "kg_edges", key="pred")
     ckpt.write_metrics(cat, "D_materialize", run_id, {
         "n_kg_nodes": _n(n_nodes),
         "n_kg_edges": _n(n_edges),
@@ -590,10 +600,7 @@ def stage_e_analytics(cat: Catalog, cfg: PipelineConfig):
         edges, comm.select("node", F.col("community").alias("label"))
     ).collect()[0]["modularity"]
     sym.unpersist()
-    ckpt.mark_processed(
-        cat, "E_analytics", run_id,
-        cat.spark.createDataFrame([("__all__",)], "conv_id string"),
-    )
+    ckpt.mark_processed(cat, "E_analytics", run_id)
     ckpt.write_metrics(cat, "E_analytics", run_id, {
         "n_nodes_scored": _n(n_nodes),
         "n_edges_scored": _n(n_edges),
@@ -697,16 +704,17 @@ def run_pipeline(
             cat.vacuum(t, keep_versions=4)
     caching.release_caches()  # reclaim operator-tracked intermediates
     wall = time.time() - t0
-    n_triples = cat.read("triples_raw").count()
+    # row counts from the manifests: the stats tail submits no job
+    n_triples = cat.count("triples_raw")
     stats = {
         "wall_s": wall,
         "n_triples": n_triples,
         "triples_per_sec": n_triples / wall,
-        "n_kg_nodes": cat.read("kg_nodes").count(),
-        "n_kg_edges": cat.read("kg_edges").count(),
+        "n_kg_nodes": cat.count("kg_nodes"),
+        "n_kg_edges": cat.count("kg_edges"),
     }
     if extract_images:
-        stats["n_images"] = cat.read("images").count()
+        stats["n_images"] = cat.count("images")
     return stats
 
 

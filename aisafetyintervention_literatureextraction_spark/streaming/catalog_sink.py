@@ -66,9 +66,11 @@ def process_micro_batch(
     pipeline.extract_documents(cat, cfg, run_id, docs)
     # COMMIT POINT: one atomic state append carrying BOTH stages'
     # processed sets (mark_processed twice would commit the run_id
-    # after the first append, breaking the all-or-nothing window)
+    # after the first append, breaking the all-or-nothing window),
+    # tagged with the run_id as mark_processed tags its entry
     cat.append(ckpt.state_rows("A_reassemble", run_id, processed)
-               .union(ckpt.state_rows("B_extract", run_id, docs)), ckpt.STATE)
+               .union(ckpt.state_rows("B_extract", run_id, docs)), ckpt.STATE,
+               run_id=run_id)
     caching.release_caches()
     return "appended"
 

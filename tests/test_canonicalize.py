@@ -118,23 +118,20 @@ def test_verify_plan_build_runs_no_job(spark, corpus):
         release_caches,
     )
 
+    from sparkjobs import submitted_jobs
+
     nodes = with_node_text(candidate_nodes(_nodes_raw(spark, corpus))).persist()
     nodes.count()
-    sc = spark.sparkContext
-    group = "canonicalize-plan-build"
-    sc.setJobGroup(group, "stage-C plan build")
     try:
-        buckets = node_bucket_rows(nodes)
-        pairs = verify_pairs(bucket_join_pairs(buckets, buckets), nodes, 0.5, 0.6)
-        edges = _merge_edges(nodes, 0.5, 0.6)
-        built = list(sc.statusTracker().getJobIdsForGroup(group))
-        # the group does capture jobs: the first action shows up in it
-        pairs.count()
-        acted = list(sc.statusTracker().getJobIdsForGroup(group))
+        with submitted_jobs(spark) as jobs:
+            buckets = node_bucket_rows(nodes)
+            pairs = verify_pairs(bucket_join_pairs(buckets, buckets), nodes, 0.5, 0.6)
+            edges = _merge_edges(nodes, 0.5, 0.6)
+            built = jobs()
+            # the group does capture jobs: the first action shows up in it
+            pairs.count()
+            acted = jobs()
     finally:
-        for prop in ("spark.jobGroup.id", "spark.job.description",
-                     "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(prop, None)
         release_caches()
         nodes.unpersist()
     assert built == [], f"plan build ran jobs {built}"

@@ -9,6 +9,7 @@ import pyspark.sql.functions as F
 
 from aisafetyintervention_literatureextraction_spark import checkpoint as ckpt
 from aisafetyintervention_literatureextraction_spark.catalog import Catalog
+from sparkjobs import submitted_jobs
 
 
 def _parquet_files(catalog: Catalog, name: str, entry: dict) -> list[str]:
@@ -199,23 +200,53 @@ def test_reconcile_absent_tables_runs_no_job(spark, catalog):
         catalog, "A_reassemble", "r1", spark.createDataFrame([("c1",)], "conv_id string")
     )
     catalog.overwrite(spark.createDataFrame([(1,)], "k int"), "present", run_id="r1")
-    sc = spark.sparkContext
-    group = "reconcile-absent-tables"
-    sc.setJobGroup(group, "heal absent tables")
-    try:
+    with submitted_jobs(spark) as jobs:
         rolled = ckpt.reconcile_versions(catalog, ["node_pairs", "components"])
         pruned = ckpt.reconcile(catalog, ["kg_nodes"])
-        healed = list(sc.statusTracker().getJobIdsForGroup(group))
-        # the group does capture jobs: a present table's heal reads the set
+        healed = jobs()
+        # the group does capture jobs: a present table's read runs one
         assert ckpt.reconcile_versions(catalog, ["present"]) == {"present": 0}
-        read = list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        for prop in ("spark.jobGroup.id", "spark.job.description",
-                     "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(prop, None)
+        catalog.read("present").collect()
+        read = jobs()
     assert rolled == {} and pruned == {}
     assert healed == [], f"heal of absent tables ran jobs {healed}"
     assert read
+
+
+def test_bookkeeping_runs_no_job(spark, catalog):
+    """The run record is manifest metadata: reading the committed-run
+    set, a sentinel commit point, per-file lineage from the parquet
+    footers, metrics rows and a manifest row count submit no Spark
+    job, and compaction keeps the committed-run set."""
+    rows = [(f"c{i % 7}", i) for i in range(40)]
+    catalog.append(spark.createDataFrame(rows, "conv_id string, v int")
+                   .repartition(3), "out", run_id="r1")
+    ckpt.mark_processed(
+        catalog, "B_extract", "r1", spark.createDataFrame([("c1",)], "conv_id string"))
+    with submitted_jobs(spark) as jobs:
+        assert ckpt.committed_run_ids(catalog) == {"r1"}
+        ckpt.mark_processed(catalog, "D_materialize", "r2")  # __all__ sentinel
+        ckpt.write_lineage(catalog, "B_extract", "r1", "out")
+        ckpt.write_metrics(catalog, "B_extract", "r1", {"n": 40})
+        assert ckpt.committed_run_ids(catalog) == {"r1", "r2"}
+        assert catalog.count("out") == 40
+        ran = jobs()
+    assert ran == [], f"bookkeeping ran jobs {ran}"
+
+    lin = catalog.read(ckpt.LINEAGE).collect()
+    assert sum(r["n_rows"] for r in lin) == 40
+    assert sorted(r["partition_id"] for r in lin) == list(range(len(lin)))
+    assert min(r["conv_id_min"] for r in lin) == "c0"
+    assert max(r["conv_id_max"] for r in lin) == "c6"
+    state = {(r["stage"], r["conv_id"], r["run_id"])
+             for r in catalog.read(ckpt.STATE).collect()}
+    assert state == {("B_extract", "c1", "r1"), ("D_materialize", "__all__", "r2")}
+    assert {(r["metric"], r["value"]) for r in catalog.read(ckpt.METRICS).collect()
+            if r["metric"] != "wall_ts"} == {("n", "40")}
+
+    catalog.compact(ckpt.STATE)
+    assert catalog.n_entries(ckpt.STATE) == 1
+    assert ckpt.committed_run_ids(catalog) == {"r1", "r2"}
 
 
 def test_empty_append_and_read_or_empty(spark, catalog):

@@ -71,6 +71,39 @@ def test_nonconvergence_raises(spark):
         connected_components(v, e, max_iter=1)
 
 
+def test_one_job_per_round(spark):
+    """Each round pins its labels with ONE job, and the changed-label
+    count rides it: with AQE and broadcast joins off (no map-stage or
+    broadcast jobs) a round submits exactly one job, a 2-node graph
+    converges in two rounds, and a capped chain still raises."""
+    import pytest
+    from sparkjobs import submitted_jobs
+
+    conf = {"spark.sql.adaptive.enabled": "false",
+            "spark.sql.autoBroadcastJoinThreshold": "-1"}
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        v = spark.createDataFrame([(i,) for i in range(64)], "node_id long")
+        e = spark.createDataFrame([(i, i + 1) for i in range(63)], "a_id long, b_id long")
+        with submitted_jobs(spark) as jobs:
+            with pytest.raises(RuntimeError, match="did not converge"):
+                connected_components(v, e, max_iter=1)
+            one_round = jobs()
+        with submitted_jobs(spark) as jobs:
+            comps = connected_components(
+                spark.createDataFrame([(0,), (1,)], "node_id long"),
+                spark.createDataFrame([(0, 1)], "a_id long, b_id long"))
+            two_rounds = jobs()
+        assert {r["component_id"] for r in comps.collect()} == {0}
+    finally:
+        for k, val in old.items():
+            spark.conf.set(k, val)
+    assert len(one_round) == 1, one_round
+    assert len(two_rounds) == 2, two_rounds
+
+
 def test_component_id_is_min_node(spark):
     v = spark.createDataFrame([(10,), (7,), (3,)], "node_id long")
     e = spark.createDataFrame([(10, 7), (7, 3)], "a_id long, b_id long")

@@ -34,11 +34,13 @@ def _canon_state(cat):
 
 
 def _sig_metric(cat):
-    met = cat.read(ckpt.METRICS).filter(
-        (F.col("stage") == "C_canonicalize")
-        & (F.col("metric") == "n_signatures_computed")
-    )
-    return [int(r["value"]) for r in met.collect()]
+    """n_signatures_computed of every stage-C run, in run order (a
+    multi-file scan returns rows in no particular file order)."""
+    runs: dict = {}
+    for r in cat.read(ckpt.METRICS).filter(F.col("stage") == "C_canonicalize").collect():
+        runs.setdefault(r["run_id"], {})[r["metric"]] = r["value"]
+    return [int(m["n_signatures_computed"])
+            for m in sorted(runs.values(), key=lambda m: float(m["wall_ts"]))]
 
 
 def _aliases(cat):

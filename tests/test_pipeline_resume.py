@@ -177,6 +177,41 @@ def test_ingest_json_quarantine_and_suggestions(spark, warehouse):
     assert cat.read("ontology_suggested").count() == 2
 
 
+def test_ingest_after_build_reaches_kg_edges(spark, corpus, warehouse):
+    """Ingested triples land through stage B's landing half, so on a
+    built warehouse (stage D materializes from ``edges_agg``) one
+    Variant-B triple reaches ``kg_edges`` on the next stage C+D run."""
+    import json, os
+    from aisafetyintervention_literatureextraction_spark.plans.ingest import (
+        ingest_extraction_json,
+    )
+    from aisafetyintervention_literatureextraction_spark.plans.pipeline import (
+        PipelineConfig, stage_c_canonicalize, stage_d_materialize,
+    )
+
+    df, _ = corpus
+    convs = sorted(r["conv_id"] for r in df.select("conv_id").distinct().collect())
+    run_pipeline(spark, df.filter(F.col("conv_id").isin(convs[:2])), warehouse)
+    cat = Catalog(spark, warehouse)
+    assert cat.exists("edges_agg")
+    d = os.path.join(warehouse, "ingest_b")
+    os.makedirs(d)
+    edge = {"type": "MITIGATES", "rationale": "r", "confidence": 0.8,
+            "target_node": {"type": "CONCEPT", "name": "late finding",
+                            "canonical_name": "late finding", "aliases": [],
+                            "confidence": 0.9, "notes": "n"}}
+    with open(os.path.join(d, "paper_late.json"), "w") as f:
+        json.dump({"new_node_types": [], "new_edge_types": [], "edges": [edge]}, f)
+    stats = ingest_extraction_json(spark, cat, d, variant="b")
+    assert stats == {**stats, "n_triples_ok": 1, "n_triples_quarantined": 0}
+
+    cfg = PipelineConfig(warehouse=warehouse)
+    stage_c_canonicalize(cat, cfg)
+    stage_d_materialize(cat, cfg)
+    hits = cat.read("kg_edges").filter(F.array_contains("conv_ids", "paper_late"))
+    assert [r["pred"] for r in hits.collect()] == ["MITIGATES"]
+
+
 def test_edges_agg_matches_full_rescan(spark, corpus, warehouse):
     """The incrementally-merged edges_agg table must produce the same
     graph as re-aggregating the full triples_raw history — across an
